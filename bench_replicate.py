@@ -249,7 +249,14 @@ def main() -> None:
         else:
             df = df.coalesce(max(1, args.replicas // 2))
         df.write.mode("overwrite").parquet(out)
-        n = spark.read.parquet(out).count()
+        # the footer schema load_table reads must be the one Spark infers
+        inferred = spark.read.parquet(out)
+        footer = schemas.load_table(spark, args.dest, t).schema
+        if footer != inferred.schema:
+            raise SystemExit(
+                f"{t}: footer schema {footer} != inferred {inferred.schema}"
+            )
+        n = inferred.count()
         print(f"{t}: {n} rows -> {out}")
     spark.stop()
 

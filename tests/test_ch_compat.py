@@ -3111,6 +3111,43 @@ def test_state_two_level_rewrite_fires_and_preserves_values(spark):
         assert "__msents" not in tb and "__msq" not in tb, bad
 
 
+def test_state_two_level_alias_shadowing_a_column_falls_back(spark):
+    """ADVICE r15 medium: ``substr(g, 1, 2) AS g ... GROUP BY g`` groups by
+    the input column g in Spark, not by the alias. The two-level rewrite
+    used to accept the bare alias as a GROUP BY match and grouped by the
+    alias expression: one row where the fallback returns two. A computed
+    key now matches only by its expression, so the two paths agree."""
+    spark.sql(
+        "SELECT * FROM VALUES ('abc', array(1L), array(10L)),"
+        " ('abd', array(1L), array(5L)) AS t(g, ks, vs)"
+    ).createOrReplaceTempView("tl_alias_t")
+
+    def rows(sql):
+        return sorted(
+            (r.g, tuple(sorted(dict(r.sm).items())))
+            for r in spark.sql(ch_compat.translate(sql)).collect()
+        )
+
+    shadowed = (
+        "SELECT substr(g, 1, 2) AS g, sumMapState(ks, vs) AS sm "
+        "FROM tl_alias_t GROUP BY g"
+    )
+    assert "__msents" not in ch_compat.translate(shadowed)
+    # the alias-less state item forces the expression-level fallback
+    fallback = rows(shadowed.replace(" AS sm", " sm"))
+    assert fallback == [("ab", ((1, 5),)), ("ab", ((1, 10),))]
+    assert rows(shadowed) == fallback
+
+    # grouping by the key expression itself still takes the two-level path
+    by_expr = (
+        "SELECT substr(g, 1, 2) AS g, sumMapState(ks, vs) AS sm "
+        "FROM tl_alias_t GROUP BY substr(g, 1, 2)"
+    )
+    assert "__msents" in ch_compat.translate(by_expr)
+    assert rows(by_expr) == rows(by_expr.replace(" AS sm", " sm"))
+    assert rows(by_expr) == [("ab", ((1, 15),))]
+
+
 def test_round10_advice_fixes_empty_state_merges(spark):
     """ADVICE r09 regressions: a -Merge over a group whose states are all
     NULL (e.g. every source value NULL -> quantileState produced an empty

@@ -1024,13 +1024,36 @@ def test_upsert_snapshot_numeric_table_names_roundtrip(spark, tmp_path):
     assert dict(got.dtypes)["schema"] == "string"
     vals = {(r["schema"], r["table"]) for r in got.collect()}
     assert vals == {("001", "0123"), ("001", "2024-01-01"), ("shop", "t_1")}
-    # the session conf is restored after the read
+    # the read leaves the session conf alone
     assert (
         spark.conf.get(
             "spark.sql.sources.partitionColumnTypeInference.enabled"
         )
         == "true"
     )
+
+
+def test_upsert_snapshot_read_sets_no_session_conf(spark, tmp_path, monkeypatch):
+    """Every running stream shares the session's conf: a snapshot read that
+    flipped a conf and restored it could interleave with another stream's
+    read and leave the conf flipped for good. The read sets nothing."""
+    from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import upsert_job
+
+    snap = str(tmp_path / "snap")
+    spark.createDataFrame(
+        [("001", "0123", 1, "a"), ("shop", "t_1", 3, "c")],
+        "schema string, table string, row_pk int, v string",
+    ).write.partitionBy("schema", "table").parquet(snap)
+
+    def refuse(*args, **kwargs):
+        raise AssertionError(f"snapshot read set a session conf: {args}")
+
+    monkeypatch.setattr(spark.conf, "set", refuse)
+    got = upsert_job._read_snapshot(spark, snap)
+    assert {(r["schema"], r["table"]) for r in got.collect()} == {
+        ("001", "0123"),
+        ("shop", "t_1"),
+    }
 
 
 def test_upsert_empty_first_epoch_publishes_nothing(spark, tmp_path):

@@ -969,13 +969,19 @@ def _two_level_block(block: str) -> str | None:
     # names is equivalent), and every key item must appear in GROUP BY
     # (else it is some OTHER aggregate — e.g. groupArrayState — that this
     # rewrite must not touch: fall back to the expression expansions).
+    # The bare alias of ``expr AS name`` is no match: Spark resolves
+    # GROUP BY name to an input column of that name before the alias
+    # (``substr(g, 1, 2) AS g ... GROUP BY g`` groups by the column g),
+    # which grouping by the key output would not do.
     gb_norm = {_norm_expr(g) for g in gb_items}
     covered: set[str] = set()
     for it, alias in key_items:
-        mine = {alias.lower(), _norm_expr(it)}
+        mine = {_norm_expr(it)}
         am = re.search(r"(?is)^(.*\S)\s+AS\s+\w+\s*$", it)
         if am is not None:
             mine.add(_norm_expr(am.group(1)))
+        else:
+            mine.add(alias.lower())
         if not mine & gb_norm:
             return None
         covered |= mine

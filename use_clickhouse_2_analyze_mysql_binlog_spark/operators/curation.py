@@ -598,10 +598,6 @@ def benchmark_contamination(
     # the corpus posting): both count branches consume it, and without the
     # persist each branch would re-run the train-side shingle scan
     from use_clickhouse_2_analyze_mysql_binlog_spark.operators.cachetrack import (
-        track,
-    )
-
-    from use_clickhouse_2_analyze_mysql_binlog_spark.operators.cachetrack import (
         persist_tracked,
     )
 

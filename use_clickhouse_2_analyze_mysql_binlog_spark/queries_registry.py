@@ -1720,7 +1720,10 @@ def ch_agg_states_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sumMap STATES (key = user_id % 4, value = cents), merged on read to the
 # event_type grain. The -Merge's ([sorted keys], [values]) struct is
 # flattened to scalar (event_type, type_key, total_cents) rows Spark-side
-# for the driver's column-sorted value hash.
+# for the driver's column-sorted value hash. The inner GROUP BY names the
+# day expression, not its alias: the translator's two-level -State path
+# takes a computed key only by its expression (the tdigest sibling below
+# does the same).
 CH_AGG_MAP_STATES_SQL = """
 SELECT event_type, sumMapMerge(ts) AS spend_map
 FROM (
@@ -1728,7 +1731,7 @@ FROM (
            sumMapState(array(toInt64(user_id % 4)),
                        array(toInt64(floor(value * 100)))) AS ts
     FROM dashboard.events_all
-    GROUP BY event_type, day
+    GROUP BY event_type, toDate(ts)
 )
 GROUP BY event_type
 """
@@ -1794,7 +1797,7 @@ FROM (
     SELECT event_type, toDate(ts) AS day,
            quantileTDigestState(toInt64(floor(value * 100))) AS td
     FROM dashboard.events_all
-    GROUP BY event_type, day
+    GROUP BY event_type, toDate(ts)
 )
 GROUP BY event_type
 """

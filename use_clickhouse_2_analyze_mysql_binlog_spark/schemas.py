@@ -116,6 +116,10 @@ TESTDATA_TABLES = (
 # both engines see identical microsecond timestamps.
 _NANOS_TS_COLS = {"events": ("ts",)}
 
+#: Footer key under which Spark stores the schema of every parquet file it
+#: writes (JSON of a ``StructType``).
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
+
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one driver-generated parquet table (TESTDATA.md).
@@ -135,11 +139,15 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       min/max/filter pushdown on the timestamp columns intact. Session tz is
       pinned UTC so the naive wall-clock values map to the same instants
       DuckDB's naive semantics produce, on any host.
-    """
+
+    The schema comes from the file footer (:func:`parquet_schema`), not from
+    Spark's inference, which runs a whole Spark job to read that one footer;
+    opening a table therefore launches no job. The footer schema equals the
+    inferred one under the confs set here (tests/test_footer_schema.py)."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     for col in _NANOS_TS_COLS.get(name, ()):
         if dict(df.dtypes).get(col) == "bigint":
             df = df.withColumn(col, F.expr(f"timestamp_micros({col} div 1000)"))
@@ -148,6 +156,174 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
+
+
+def read_parquet(
+    spark: SparkSession, path: str, string_partitions: tuple[str, ...] = ()
+) -> DataFrame:
+    """``spark.read.parquet(path)`` with the schema :func:`parquet_schema`
+    reads from the footer, so opening the table launches no Spark job.
+
+    ``string_partitions`` names directory partition columns
+    (``.../col=value/...``) to read as strings, verbatim: Spark's partition
+    type inference would turn a table named ``0123`` into the int ``123``.
+    They come last, as in Spark's own read. When the footer cannot be
+    mapped, Spark infers the schema (one job), and the partition columns
+    are still declared as strings."""
+    schema = parquet_schema(spark, path)
+    if schema is None:
+        if not string_partitions:
+            return spark.read.parquet(path)
+        schema = spark.read.parquet(path).schema
+    if string_partitions:
+        schema = T.StructType(
+            [f for f in schema.fields if f.name not in string_partitions]
+            + [T.StructField(c, T.StringType()) for c in string_partitions]
+        )
+    return spark.read.schema(schema).parquet(path)
+
+
+def parquet_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(path)`` infers, read on the driver
+    from the footer of the table's first data file — zero Spark jobs.
+    Every call reads the footer again; nothing is cached.
+
+    - A file Spark wrote carries its schema as row metadata, which Spark's
+      inference returns as is; so does this. Spark makes a file source's
+      schema nullable (nested types included) whether it inferred the
+      schema or was given it, so the metadata's nullability is kept.
+    - Any other file maps its parquet types as Spark's converter does,
+      under the session's confs. pyarrow shows both Spark's INT96
+      timestamps and real TIMESTAMP(NANOS) columns as ``timestamp[ns]``,
+      so timestamps are decided by the parquet physical type: INT96 is a
+      timestamp, INT64 nanos a bigint (``nanosAsLong``), naive micros or
+      millis TIMESTAMP_NTZ only while ``inferTimestampNTZ`` is on.
+
+    Returns None — the caller lets Spark infer — for a missing, empty or
+    unreadable table and for a type outside the mapped set (time,
+    duration, nested timestamps, ...). Handles a single file and a
+    directory of files, partition subdirectories included; partition
+    columns are not part of a file's footer."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    first = next(_parquet_files(path), None)
+    if first is None:
+        return None
+    try:
+        with pq.ParquetFile(first) as pf:
+            row_metadata = (pf.metadata.metadata or {}).get(_SPARK_ROW_METADATA)
+            leaves = [pf.schema.column(i) for i in range(len(pf.schema))]
+            arrow_schema = pf.schema_arrow
+    except (OSError, pa.lib.ArrowException):
+        return None
+    if row_metadata is not None:
+        try:
+            return T.StructType.fromJson(json.loads(row_metadata))
+        except ValueError:  # a type this PySpark cannot parse
+            return None
+
+    def flag(key: str, default: str) -> bool:
+        return spark.conf.get(key, default).lower() == "true"
+
+    confs = {
+        "nanos_as_long": flag("spark.sql.legacy.parquet.nanosAsLong", "false"),
+        "infer_ntz": flag("spark.sql.parquet.inferTimestampNTZ.enabled", "true"),
+        "binary_as_string": flag("spark.sql.parquet.binaryAsString", "false"),
+        "int96_as_ts": flag("spark.sql.parquet.int96AsTimestamp", "true"),
+    }
+    top_level = {c.path: c for c in leaves}
+    fields = []
+    for f in arrow_schema:
+        dt = _spark_type(f.type, top_level.get(f.name), confs)
+        if dt is None:
+            return None
+        fields.append(T.StructField(f.name, dt, True))
+    return T.StructType(fields)
+
+
+def _spark_type(t, leaf, confs: dict[str, bool]) -> T.DataType | None:
+    """Spark's type for the pyarrow type ``t`` of a non-Spark parquet
+    column; ``leaf`` is the parquet column of a top-level primitive (None
+    inside nested types). None when the type is not mapped."""
+    import json
+
+    import pyarrow as pa
+
+    if pa.types.is_dictionary(t):
+        t = t.value_type
+    if pa.types.is_timestamp(t):
+        if leaf is None:
+            return None
+        if leaf.physical_type == "INT96":
+            return T.TimestampType() if confs["int96_as_ts"] else T.BinaryType()
+        logical = json.loads(leaf.logical_type.to_json())
+        if logical.get("Type") != "Timestamp":
+            return None
+        if logical["timeUnit"] == "nanoseconds":
+            return T.LongType() if confs["nanos_as_long"] else None
+        if not logical["isAdjustedToUTC"] and confs["infer_ntz"]:
+            return T.TimestampNTZType()
+        return T.TimestampType()
+    if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+        return T.StringType() if confs["binary_as_string"] else T.BinaryType()
+    if pa.types.is_fixed_size_binary(t):
+        return T.BinaryType()
+    if pa.types.is_decimal128(t):
+        return T.DecimalType(t.precision, t.scale)
+    if pa.types.is_list(t) or pa.types.is_large_list(t):
+        elem = _spark_type(t.value_type, None, confs)
+        return None if elem is None else T.ArrayType(elem, True)
+    if pa.types.is_map(t):
+        key = _spark_type(t.key_type, None, confs)
+        value = _spark_type(t.item_type, None, confs)
+        if key is None or value is None:
+            return None
+        return T.MapType(key, value, True)
+    if pa.types.is_struct(t):
+        fields = [t.field(i) for i in range(t.num_fields)]
+        types = [_spark_type(f.type, None, confs) for f in fields]
+        if any(x is None for x in types):
+            return None
+        return T.StructType(
+            [T.StructField(f.name, x, True) for f, x in zip(fields, types)]
+        )
+    return {
+        pa.bool_(): T.BooleanType(),
+        pa.int8(): T.ByteType(),
+        pa.int16(): T.ShortType(),
+        pa.int32(): T.IntegerType(),
+        pa.int64(): T.LongType(),
+        # Spark widens unsigned types: UINT_8 -> short ... UINT_64 -> decimal
+        pa.uint8(): T.ShortType(),
+        pa.uint16(): T.IntegerType(),
+        pa.uint32(): T.LongType(),
+        pa.uint64(): T.DecimalType(20, 0),
+        pa.float32(): T.FloatType(),
+        pa.float64(): T.DoubleType(),
+        pa.string(): T.StringType(),
+        pa.large_string(): T.StringType(),
+        pa.date32(): T.DateType(),
+        pa.date64(): T.DateType(),
+    }.get(t)
+
+
+def _parquet_files(path: str):
+    """The data files of a parquet table: ``path`` itself, or every
+    ``*.parquet`` file under the directory in sorted order, partition
+    subdirectories included and ``_``/``.`` names skipped, as Spark does."""
+    import os
+
+    if not os.path.isdir(path):
+        yield path
+        return
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                yield os.path.join(root, f)
 
 
 def parquet_row_count(sf_dir: str, name: str) -> int | None:
@@ -165,15 +341,11 @@ def parquet_row_count(sf_dir: str, name: str) -> int | None:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    path = os.path.join(sf_dir, f"{name}.parquet")
     try:
-        if os.path.isdir(path):
-            return sum(
-                pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-                for f in os.listdir(path)
-                if f.endswith(".parquet")
-            )
-        return pq.ParquetFile(path).metadata.num_rows
+        return sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in _parquet_files(os.path.join(sf_dir, f"{name}.parquet"))
+        )
     except (OSError, pa.lib.ArrowException):
         # ADVICE r13 low: catch exactly the unreadable-input classes —
         # pyarrow raises ArrowInvalid (an ArrowException, NOT an OSError)

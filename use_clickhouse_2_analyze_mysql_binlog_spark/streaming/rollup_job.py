@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
 from use_clickhouse_2_analyze_mysql_binlog_spark.operators.rollups import (
     DAY_FMT,
     agg_state_merge,
@@ -91,7 +92,7 @@ def make_mv_merge_batch(
         partial = partials_fn(batch)
         merged = partial
         if latest is not None:
-            existing = spark.read.parquet(latest["dir"])
+            existing = schemas.read_parquet(spark, latest["dir"])
             unioned = existing.unionByName(partial)
             if state_fns:
                 merged = agg_state_merge(unioned, keys=keys, state_fns=state_fns)
@@ -211,11 +212,13 @@ def read_rollup(spark: SparkSession, rollup_path: str) -> DataFrame:
     """Read the latest published rollup snapshot — already fully merged (no
     read-side re-aggregation needed, unlike the reference's
     SummingMergeTree). The manifest indirection means a concurrent publish
-    never affects a reader: it keeps the snapshot dir it resolved."""
+    never affects a reader: it keeps the snapshot dir it resolved. The
+    schema comes from the snapshot file's footer, so opening the rollup
+    launches no Spark job."""
     latest = epochs.read_manifest(rollup_path)
     if latest is None:
         raise FileNotFoundError(f"no published rollup under {rollup_path}")
-    return spark.read.parquet(latest["dir"])
+    return schemas.read_parquet(spark, latest["dir"])
 
 
 def read_agg_rollup(

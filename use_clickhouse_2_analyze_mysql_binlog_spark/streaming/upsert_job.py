@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
+from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
 from use_clickhouse_2_analyze_mysql_binlog_spark.operators import merge_tree
 from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import epochs
 
@@ -57,34 +58,21 @@ _MODES = {
 
 
 def _read_snapshot(spark: SparkSession, snapshot_dir: str) -> DataFrame:
-    """Read one versioned snapshot dir, restoring the pre-write schema.
+    """Read one versioned snapshot dir with the pre-write schema.
 
-    The write is directory-partitioned by (schema, table); a plain read
-    surfaces those as TRAILING, type-inferred partition columns. Restore
-    the canonical leading position and string type so snapshot consumers
-    (the epoch MERGE's ``unionByName``, ``exceptAll``-style comparisons)
-    see the exact pre-write schema.
-
-    Partition-column TYPE INFERENCE is disabled for the read (ADVICE r06
-    #3): inference round-trips numeric-looking names lossily — a table
-    named ``0123`` comes back as int ``123`` and the cast-to-string
-    below would re-corrupt the upsert key and every ``read_state``
-    filter on it. The conf is toggled only around the eager
-    ``spark.read.parquet`` call (schema resolution happens there) and
-    restored after."""
-    from pyspark.sql import functions as F
-
-    conf_key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    prev = spark.conf.get(conf_key, "true")
-    spark.conf.set(conf_key, "false")
-    try:
-        raw = spark.read.parquet(snapshot_dir)
-    finally:
-        spark.conf.set(conf_key, prev)
-    part_cols = [c for c in ("schema", "table") if c in raw.columns]
+    The file columns come from a data file's footer — the schema the epoch
+    wrote — so the read launches no Spark job (``schemas.read_parquet``).
+    The write is directory-partitioned by (schema, table); those columns
+    are declared as strings, so values that look numeric round-trip
+    verbatim (ADVICE r06 #3: type inference turns a table named ``0123``
+    into ``123``, corrupting the upsert key and every ``read_state``
+    filter on it), and are moved back to their leading position so
+    snapshot consumers (the epoch MERGE's ``unionByName``,
+    ``exceptAll``-style comparisons) see the exact pre-write schema."""
+    part_cols = ("schema", "table")
+    raw = schemas.read_parquet(spark, snapshot_dir, string_partitions=part_cols)
     return raw.select(
-        *[F.col(c).cast("string").alias(c) for c in part_cols],
-        *[c for c in raw.columns if c not in part_cols],
+        *part_cols, *[c for c in raw.columns if c not in part_cols]
     )
 
 
@@ -176,8 +164,8 @@ def read_state(
     columns, the filters land as PartitionFilters and the scan touches
     only that table's files — the per-table read path a CDC consumer
     actually wants (plan pinned in tests/test_streaming.py). Column
-    order and partition-column types are restored by
-    :func:`_read_snapshot`."""
+    order and partition-column types are those of the write
+    (:func:`_read_snapshot`)."""
     latest = epochs.read_manifest(state_path)
     if latest is None:
         raise FileNotFoundError(f"no published state under {state_path}")
