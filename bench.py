@@ -58,9 +58,6 @@ BENCH_QUERIES = [
 WATCHED_QUERIES = [
     "dedup_apply_connected_components",
     "benchmark_contamination",
-    # r08: dedup_ngram_jaccard retired from the registry (COVERAGE.md
-    # retire-on-demand); the staged twin runs the same operator and
-    # inherits the watched min-of-2 slot
     "dedup_ngram_jaccard_staged",
     # r07: in-sweep single-pass systematically over-reported these two
     # (~2.2-2.4 s) vs isolated min-of-3 (1.15/1.28 s) — first-run cache
@@ -180,7 +177,7 @@ def main() -> None:
         # change results. The two release points are pinned by
         # tests/test_bench_cache_release.py, which re-derives each cache
         # tag's consumer set from the live registry (including the
-        # headline/watched/changed extra passes — the dedup-family tags
+        # headline/watched extra passes — the dedup-family tags
         # stay resident because watched rows re-run at the end, exactly
         # the r14 methodology).
         for tag in CACHE_RELEASE_AFTER.get(name, ()):
@@ -204,16 +201,6 @@ def main() -> None:
     # under ~1.1x is methodology-settled as box noise, not code.
     extra = {n: 2 for n in BENCH_QUERIES}
     extra.update({n: 1 for n in WATCHED_QUERIES})
-    # Round 13 (VERDICT r12 next #1): CHANGED_THIS_ROUND queries are the
-    # only ones the per-query bench_compare gate fires on, yet they were
-    # the only gated set still timed single-pass — in both r11 and r12
-    # the builder-final and driver-final sweeps disagreed on the gate
-    # verdict for a sub-second changed query (same HEAD, 0.442 vs
-    # 0.548 s: pure box noise flipping a 1.2x gate). Changed queries now
-    # get min-of-3: they are few (the rotation budget caps them at ~3-5
-    # per round) so the extra passes cost seconds, and the gate verdict
-    # must be a property of the code, not of one sweep pass.
-    extra.update({n: max(extra.get(n, 0), 2) for n in R.CHANGED_THIS_ROUND})
     for name, passes in ((n, p) for n, p in extra.items() if n in timings):
         for _ in range(passes):
             t0 = time.perf_counter()
@@ -293,10 +280,9 @@ def main() -> None:
         "round": this_round,
         "git_sha": git_sha,
         "headline_passes": 3,
-        # ADVICE r13 low: per-query timing methodology, so bench_compare
-        # can warn when a gated query was min-of-N in one snapshot and
-        # single-pass in the other (min-of-N reads systematically lower;
-        # a methodology transition biases the gated ratio toward PASS).
+        # per-query timing methodology: min-of-N reads systematically
+        # lower than single-pass, so compare a query's numbers only
+        # across snapshots with the same pass count.
         "query_passes": {
             n: 1 + extra.get(n, 0) for n in timings
         },

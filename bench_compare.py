@@ -1,39 +1,29 @@
 #!/usr/bin/env python3
 """Bench regression gate: compare two bench.py JSON outputs per query.
 
-Usage: python3 bench_compare.py BASE.json NEW.json [threshold] [hard_cap]
+Usage: python3 bench_compare.py BASE.json NEW.json [hard_cap]
 
-Round-11 gate design (VERDICT r10 next #2 — the third consecutive round
-in which per-query minima on untouched code read 1.2-1.3x high on the
-driver box while every aggregate signal improved, so per-query gating on
-unchanged code measures the BOX, not the code):
+Per-query minima on unchanged code read 1.2-1.3x high from box state
+alone (VERDICT r10 next #2), so no single query gates on a drift-adjusted
+ratio. Ratios are drift-normalized by dividing by the median per-query
+ratio across the whole registry, so a uniformly slower box does not flag
+spurious regressions (round 5: identical code measured a 1.30x median
+from box noise alone). The gates:
 
 1. **Headline trio-total gate**: the five reference-core queries gate as
    ONE number — the min-of-3 headline total (``value``) ratio must stay
-   under ``1.1x`` (the min-of-N methodology's observed noise band).
-   Summing before comparing averages out per-query box jitter that
-   min-of-3 demonstrably does not kill.
-2. **Per-query gate only for code changed this round**: queries listed
-   in ``queries_registry.CHANGED_THIS_ROUND`` at the CURRENT commit —
-   exactly the set whose plans could have regressed — gate at
-   ``threshold`` (default 1.2x) after drift normalization: every ratio
-   is divided by the median per-query ratio across the whole registry,
-   so a uniformly slower box does not flag spurious regressions (round
-   5: identical code measured a 1.30x median from box noise alone).
-3. **Raw hard cap backstop** on gated queries (default 1.75x): drift
-   normalization is blind to a change that slows the WHOLE registry
-   uniformly; the cap still catches it.
-4. **All-query-total backstop** (round 12, ADVICE r11 #4): the
+   under ``1.1x`` drift-adjusted (the min-of-N methodology's observed
+   noise band), with a 1.5x raw cap. Summing before comparing averages
+   out per-query box jitter that min-of-3 demonstrably does not kill.
+2. **All-query-total backstop** (round 12, ADVICE r11 #4): the
    registry-wide total gates at 1.25x drift-adjusted — a shared-infra
-   edit slowing many untouched queries 1.3-1.7x each sat below every
-   other gate. CHANGED_THIS_ROUND freshness itself is asserted by
-   tests/test_driver_window.py::test_changed_this_round_is_fresh.
+   edit slowing many queries 1.3-1.7x each sits below the other gates.
+3. **Raw hard cap** on headline and watched queries (default 1.75x):
+   drift normalization is blind to a change that slows the WHOLE
+   registry uniformly, and the trio SUM can mask one small headline
+   query's blowup when a big sibling improves; the cap catches both.
 
-Everything else (watched heavies included) is REPORTED with the same
-ratios but does not gate — their code did not change, so a high reading
-is box state by construction; a genuine plan regression on untouched
-code can only come from a shared-infra edit, which the headline trio
-and changed-query gates cover.
+Every other query is REPORTED with the same ratios but does not gate.
 
 Methodology note: bench.py times headline min-of-3 / watched min-of-2
 (``headline_passes`` in the snapshot); the gate prints a warning when
@@ -49,6 +39,9 @@ import sys
 from bench import BENCH_QUERIES, WATCHED_QUERIES
 from use_clickhouse_2_analyze_mysql_binlog_spark import benchfmt
 
+#: report-only: a row whose drift-adjusted ratio exceeds this is labelled
+#: "slower" in the table; it gates nothing
+REPORT_SLOWER = 1.2
 
 def _normalize(doc: dict) -> dict:
     """Decode benchfmt's compact 'queries' payload into flat seconds:
@@ -118,8 +111,7 @@ def _load(path: str) -> dict:
 
 def main() -> int:
     base_path, new_path = sys.argv[1], sys.argv[2]
-    threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 1.2
-    hard_cap = float(sys.argv[4]) if len(sys.argv) > 4 else 1.75
+    hard_cap = float(sys.argv[3]) if len(sys.argv) > 3 else 1.75
     base = _load(base_path)
     new = _load(new_path)
     if base.get("headline_passes") != new.get("headline_passes"):
@@ -147,32 +139,8 @@ def main() -> int:
     # newly-faster neighbors (round 6: a 0.91x median turned an unchanged
     # headline query's 1.11x raw into a 1.22x "adjusted" FAIL). Speedups
     # elsewhere are not evidence that this query got slower; the raw
-    # threshold and hard cap still govern.
+    # caps still govern.
     gate_drift = max(drift, 1.0)
-
-    # per-query gating applies ONLY to queries whose implementation
-    # changed at the current commit (docstring policy #2)
-    from use_clickhouse_2_analyze_mysql_binlog_spark import (
-        queries_registry as R,
-    )
-
-    changed = set(R.CHANGED_THIS_ROUND)
-
-    # ADVICE r13 low: a gated query timed min-of-N in one snapshot but
-    # single-pass in the other reads systematically lower on the min-of-N
-    # side — in a methodology-transition round that bias (up to the
-    # documented 1.2-1.3x noise band) leans the gate toward PASS. Warn
-    # per gated query, not just for the headline trio.
-    bp = base.get("query_passes") or {}
-    np_ = new.get("query_passes") or {}
-    for name in sorted(changed):
-        if name in bp and name in np_ and bp[name] != np_[name]:
-            print(
-                f"note: gated query {name} timed with {bp[name]} pass(es) "
-                f"in base vs {np_[name]} in new — ratio biased toward the "
-                "min-of-N side; treat a near-threshold verdict as "
-                "methodology, not code"
-            )
 
     failures: list[str] = []
     rows = []
@@ -182,45 +150,32 @@ def main() -> int:
             rows.append((name, b, n, None, "added" if b is None else "removed"))
             continue
         ratio = n / b if b else float("inf")
-        adj = ratio / gate_drift
-        gated = name in changed
+        capped = name in BENCH_QUERIES or name in WATCHED_QUERIES
         status = "ok"
-        if adj > threshold or ratio > hard_cap:
-            if gated:
-                status = "REGRESSED"
-                failures.append(
-                    f"{name}: {b:.3f}s -> {n:.3f}s "
-                    f"({ratio:.2f}x raw, {adj:.2f}x drift-adjusted)"
-                )
-            elif (
-                name in BENCH_QUERIES or name in WATCHED_QUERIES
-            ) and ratio > hard_cap:
-                # untouched headline/watched queries keep the RAW hard
-                # cap only: the 1.2-1.3x readings that false-FAILed
-                # three rounds sit far below it, but a genuine blowup in
-                # one small headline query (which the trio SUM can mask
-                # when a big sibling improves) still fails
-                status = "REGRESSED (hard cap)"
-                failures.append(
-                    f"{name}: {b:.3f}s -> {n:.3f}s "
-                    f"({ratio:.2f}x raw > {hard_cap}x cap on an "
-                    "untouched headline/watched query)"
-                )
-            elif name in BENCH_QUERIES or name in WATCHED_QUERIES:
-                status = "slower (headline/watched; trio-total gates)"
-            else:
-                status = "slower (ungated)"
+        if capped and ratio > hard_cap:
+            status = "REGRESSED (hard cap)"
+            failures.append(
+                f"{name}: {b:.3f}s -> {n:.3f}s "
+                f"({ratio:.2f}x raw > {hard_cap}x cap on a "
+                "headline/watched query)"
+            )
+        elif ratio / gate_drift > REPORT_SLOWER or ratio > hard_cap:
+            status = (
+                "slower (headline/watched; trio-total gates)"
+                if capped
+                else "slower (ungated)"
+            )
         rows.append((name, b, n, ratio, status))
 
-    # headline trio-total gate (docstring policy #1): compare the
-    # min-of-N headline totals as one number, DRIFT-NORMALIZED like the
-    # per-query gate (the first r11 run read a uniform 1.15x registry
-    # median from box state alone — an un-normalized trio ratio of
-    # 1.14x would have false-FAILed the exact class this gate exists to
-    # absorb); a raw cap backstops a genuine registry-wide slowdown
-    # that drift normalization is blind to. Prefer the snapshot's
-    # "value" field; fall back to summing the five from the per-query
-    # payload when a side lacks it (partial/salvaged loads).
+    # headline trio-total gate (docstring gate #1): compare the min-of-N
+    # headline totals as one number, DRIFT-NORMALIZED (the first r11 run
+    # read a uniform 1.15x registry median from box state alone — an
+    # un-normalized trio ratio of 1.14x would have false-FAILed the
+    # exact class this gate exists to absorb); a raw cap backstops a
+    # genuine registry-wide slowdown that drift normalization is blind
+    # to. Prefer the snapshot's "value" field; fall back to summing the
+    # five from the per-query payload when a side lacks it
+    # (partial/salvaged loads).
     HEADLINE_TOTAL_THRESHOLD = 1.1
     HEADLINE_TOTAL_RAW_CAP = 1.5
 
@@ -232,16 +187,15 @@ def main() -> int:
         ]
         return sum(vals) if len(vals) == len(BENCH_QUERIES) else None
 
-    # All-query-total backstop (round 12, ADVICE r11 #4): the per-query
-    # gate only fires on CHANGED_THIS_ROUND, so a shared-infra edit that
-    # slows many UNTOUCHED queries 1.3-1.7x each (below the raw cap)
-    # previously passed. The registry-wide total, drift-adjusted, catches
-    # that class while staying insensitive to single-query box jitter
-    # (r10->r11 replay: 1.15x raw / 1.12x drift -> 1.03x adjusted, PASS).
+    # All-query-total backstop (docstring gate #2): the registry-wide
+    # total, drift-adjusted, catches a shared-infra edit that slows many
+    # queries 1.3-1.7x each (below the raw cap) while staying insensitive
+    # to single-query box jitter (r10->r11 replay: 1.15x raw / 1.12x
+    # drift -> 1.03x adjusted, PASS).
     TOTAL_THRESHOLD = 1.25
     # ADVICE r12 low: the stored registry-wide totals are not comparable
-    # across a registry rotation (a retirement deflates the new total by
-    # that query's runtime, loosening the gate; an addition inflates it,
+    # across registry changes (a removal deflates the new total by that
+    # query's runtime, loosening the gate; an addition inflates it,
     # tightening it spuriously) — compare totals over the INTERSECTION
     # of query names present in both snapshots instead.
     # ADVICE r13 low: distinct name from the drift tuple list above, and
@@ -266,8 +220,8 @@ def main() -> int:
         print(
             "WARNING: headline trio-total gate SKIPPED — a snapshot "
             "lacks both a 'value' field and full headline per-query "
-            "coverage (partial/salvaged load); only changed-query and "
-            "hard-cap gating ran"
+            "coverage (partial/salvaged load); only the all-query total "
+            "and hard-cap gates ran"
         )
     if headline_ratio is not None:
         headline_adj = headline_ratio / gate_drift
@@ -290,18 +244,17 @@ def main() -> int:
         rs = f"{ratio:.2f}x" if ratio is not None else "-"
         print(f"{name:<{w}}  {bs:>8}  {ns:>8}  {rs:>6}  {status}")
     # Box-drift summary (VERDICT r04 #7): the median per-query ratio is
-    # the run-level speed difference between the two boxes/runs; gating
-    # above divides every ratio by it before comparing to the threshold.
+    # the run-level speed difference between the two boxes/runs; the
+    # total gates above divide by it before comparing to their thresholds.
     print(
         f"median per-query ratio (run-level drift): {drift:.2f}x "
-        f"(gating divisor clamped to {gate_drift:.2f}x) — per-query gate "
-        f"(changed-this-round only: {sorted(changed)}) fires on "
-        f"ratio/divisor > {threshold}x OR raw ratio > {hard_cap}x"
+        f"(gating divisor clamped to {gate_drift:.2f}x); headline/watched "
+        f"queries fail on a raw ratio > {hard_cap}x"
     )
     hr = f" ({headline_ratio:.2f}x)" if headline_ratio is not None else ""
     # ADVICE r13 low: print the shared-intersection totals the backstop
     # actually gates on, not the stored total_all_queries fields (which
-    # diverge from the gated numbers across a registry rotation).
+    # diverge from the gated numbers across registry changes).
     tbs = f"{tb:.1f}" if tb is not None else "-"
     tns = f"{tn:.1f}" if tn is not None else "-"
     print(
@@ -311,15 +264,12 @@ def main() -> int:
         f"{tbs}s -> {tns}s (gates at {TOTAL_THRESHOLD}x drift-adjusted)"
     )
     if failures:
-        print(
-            "FAIL: headline-trio-total or changed-query regressions:\n  "
-            + "\n  ".join(failures)
-        )
+        print("FAIL: bench regressions:\n  " + "\n  ".join(failures))
         return 1
     print(
-        "PASS: headline trio total within "
-        f"{HEADLINE_TOTAL_THRESHOLD}x and no changed-query "
-        f"drift-adjusted regression over {threshold}x"
+        f"PASS: headline trio total within {HEADLINE_TOTAL_THRESHOLD}x, "
+        f"all-query total within {TOTAL_THRESHOLD}x and no headline/watched "
+        f"query over the {hard_cap}x raw cap"
     )
     return 0
 

@@ -2,7 +2,7 @@
 
 r15 (VERDICT r14 next #4): bench.py unpersists a family's shared cache
 right after the cache tag's LAST consumer in the full run sequence (main
-sweep + headline/watched/changed extra passes). A release point placed
+sweep + headline/watched extra passes). A release point placed
 BEFORE a later consumer would silently make that consumer rebuild the
 cache inside its timed region — a methodology change that reads as a
 phantom regression. This test re-derives every tag's consumer set from
@@ -33,8 +33,16 @@ def _full_sequence() -> list[str]:
     names += [n for n in B.BENCH_QUERIES if n in R.QUERIES]
     extra = {n: 2 for n in B.BENCH_QUERIES}
     extra.update({n: 1 for n in B.WATCHED_QUERIES})
-    extra.update({n: max(extra.get(n, 0), 2) for n in R.CHANGED_THIS_ROUND})
     return names + [n for n in extra if n in R.QUERIES]
+
+
+def test_bench_query_lists_are_registered():
+    """bench.py silently skips names missing from the registry, so a typo
+    in the headline or WATCHED list would drop that query unnoticed."""
+    missing = [
+        n for n in B.BENCH_QUERIES + B.WATCHED_QUERIES if n not in R.QUERIES
+    ]
+    assert not missing, f"bench lists name unregistered queries: {missing}"
 
 
 def test_release_points_at_or_after_last_consumer(spark):

@@ -2906,9 +2906,8 @@ def test_agg_states_two_level_read_vs_duckdb(spark, duck):
     coarser grain — against a direct one-level DuckDB aggregate: merging
     partial states must lose nothing. Exact family only (sum/count/max/
     avg); the uniq/HLL member is covered by the streaming test's
-    tolerance check (test_ddl_compat). Registered as registry row
-    `ch_agg_states_rollup` in round 9 (window-deferred from r08, see
-    queries_registry ROTATION BUDGET note)."""
+    tolerance check (test_ddl_compat). The same read is registry row
+    `ch_agg_states_rollup`."""
     from tests.conftest import SF_DIR, assert_parity
     from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
 

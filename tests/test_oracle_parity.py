@@ -20,3 +20,14 @@ def test_every_query_runs(spark):
         df = fn(spark, SF_DIR)
         assert df.columns, name
         assert df.count() >= 0, name
+
+
+def test_oracles_cover_queries():
+    """Every query has an oracle unless explicitly rows-only by design."""
+    rows_only = {
+        "embedding_kmeans",
+        "size_quantiles_approx",
+        "daily_distinct_gtids_approx",
+    }
+    missing = [n for n in R.QUERIES if n not in R.ORACLES and n not in rows_only]
+    assert missing == [], f"queries silently lacking an oracle: {missing}"

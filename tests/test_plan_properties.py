@@ -3,6 +3,12 @@ must hold structurally, not just anecdotally — a change that reintroduces
 a shuffle or loses a broadcast should fail here, at any data size."""
 
 from use_clickhouse_2_analyze_mysql_binlog_spark import queries_registry as R
+from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
+from use_clickhouse_2_analyze_mysql_binlog_spark.operators import (
+    curation,
+    dedup,
+    rollups,
+)
 from tests.conftest import SF_DIR
 
 
@@ -71,12 +77,10 @@ def test_gtid_set_operations_single_pass(spark):
 def test_sampling_and_scrub_are_shuffle_free(spark):
     # hash-threshold sampling and PII scrubbing are pure row-local work:
     # any Exchange here means the operator stopped scaling with the scan.
-    # corpus_sample_stratified retired from the registry in r12 (rotation
-    # budget) — the module-level function and its plan contract remain.
-    for fn in (R.corpus_sample_stratified, R.QUERIES["text_pii_scrub"]):
-        df = fn(spark, SF_DIR)
+    docs = schemas.load_table(spark, SF_DIR, "documents")
+    for df in (curation.stratified_sample(docs), curation.pii_scrub(docs)):
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, (fn, plan)
+        assert "Exchange" not in plan, plan
 
 
 def test_top_bigrams_uses_takeordered(spark):
@@ -108,10 +112,7 @@ def test_map_state_rollup_three_exchanges_no_joins(spark):
 
 
 def test_corpus_curate_two_shuffles_no_joins(spark):
-    # corpus_curate retired from the registry r10 (corpus_curate_gopher /
-    # _materialize keep the driver signal) — the operator itself and this
-    # plan pin remain, called as the plain module function
-    df = R.corpus_curate(spark, SF_DIR)
+    df = curation.curate_corpus(schemas.load_table(spark, SF_DIR, "documents"))
     plan = df._jdf.queryExecution().executedPlan().toString()
     # quality gate fuses into the scan; keep-first dedup is a window on
     # content_hash; stats groupBy — nothing joins back to the fact table
@@ -122,8 +123,6 @@ def test_corpus_curate_two_shuffles_no_joins(spark):
 def test_scans_are_pruned(spark):
     # column pruning must reach the parquet scan of the fact table; ts reads
     # as bigint (round<=2 nanos testdata) or timestamp (round 3+ micros).
-    # (daily_event_counts retired from the registry r11 — the by_table
-    # sibling reads two more pruned columns, same operator family.)
     plan = _plan(spark, "daily_event_counts_by_table")
     # the binlog view derives schema/table from user_id, so the pruned
     # scan is exactly (ts, user_id, event_type)
@@ -216,9 +215,9 @@ def test_multimodal_metadata_prunes_scan(spark):
 
 
 def test_pivot_is_rollup_plus_tiny_shuffle(spark):
-    # daily_counts_pivot retired from the registry in r12 (rotation
-    # budget) — the operator and its plan contract remain
-    df = R.daily_counts_pivot(spark, SF_DIR)
+    df = rollups.daily_counts_pivot(
+        schemas.binlog_view(schemas.load_table(spark, SF_DIR, "events"))
+    )
     plan = df._jdf.queryExecution().executedPlan().toString()
     # explicit pivot values -> no schema-discovery job and no join; Spark
     # plans pivot as the (day, event_type) rollup shuffle plus a pivotfirst
@@ -277,7 +276,6 @@ def test_sequence_pack_two_level_no_whole_source_rail(spark):
     (auto-sizing picks it above DEFAULT_SMALL_INPUT_ROWS): the document
     stream shuffles on (source, bucket) — same-source rows spread across
     partitions — and the tiny per-bucket offset table broadcasts back."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
     from use_clickhouse_2_analyze_mysql_binlog_spark.operators import packing
 
     df = packing.sequence_pack_report(
@@ -368,7 +366,7 @@ def test_ch_prewhere_pushes_scan_filter(spark):
 
 def test_corpus_curate_gopher_keeps_two_shuffle_shape(spark):
     """The --gopher pre-gate is row-local: it must fuse into the scan and
-    add ZERO exchanges to corpus_curate's pinned 2-shuffle plan (window on
+    add ZERO exchanges to curate_corpus's pinned 2-shuffle plan (window on
     content_hash + stats groupBy), and still no joins."""
     plan = _plan(spark, "corpus_curate_gopher")
     assert plan.count("Exchange hashpartitioning") == 2, plan
@@ -412,10 +410,9 @@ def test_dedup_family_reuses_cached_pair_plan(spark):
     consumer materializes the MinHash pair set, the OTHER consumers'
     physical plans read the InMemoryRelation instead of rebuilding the
     LSH pipeline (CacheManager canonicalized-plan reuse)."""
-    # dedup_minhash_lsh retired from the registry in r09 (rotation
-    # budget) — the module-level function remains the family's cache
-    # primer
-    R.dedup_minhash_lsh(spark, SF_DIR).count()
+    dedup.minhash_lsh_pairs(
+        schemas.load_table(spark, SF_DIR, "documents"), threshold=0.5
+    ).count()
     plan = _plan(spark, "dedup_apply_minhash")
     assert "InMemoryTableScan" in plan, plan
     # (dedup_connected_components consumes the same cached pairs too, but
@@ -427,7 +424,6 @@ def test_translated_fold_aggregates_single_shuffle(spark):
     """The r07 behavioral aggregate translations (sequenceMatch/Count,
     topK, sumMap) are inline aggregate folds — one hash shuffle on the
     group key, no joins/windows snuck in by the rewrite."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
     from use_clickhouse_2_analyze_mysql_binlog_spark.functions import ch_compat
 
     schemas.load_table(spark, SF_DIR, "events").createOrReplaceTempView(
@@ -451,7 +447,6 @@ def test_mutation_scans_prune_partitions(spark, tmp_path):
     both reach the scan as PartitionFilters, never post-scan filters."""
     from pyspark.sql import functions as F
 
-    from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
     from use_clickhouse_2_analyze_mysql_binlog_spark.plans import storage
 
     path = str(tmp_path / "fact")
@@ -490,8 +485,6 @@ def test_map_state_merge_single_shuffle(spark):
     folds (collect_list is a TypedImperativeAggregate, so the partial
     side still combines map-side)."""
     from pyspark.sql import functions as F
-
-    from use_clickhouse_2_analyze_mysql_binlog_spark.operators import rollups
 
     partials = spark.range(0, 1000).select(
         (F.col("id") % 5).alias("k"),

@@ -3581,7 +3581,7 @@ def translate(
         ("groupArrayInsertAt",
          "map_from_entries over an explicit position column"),
         ("groupArraySample",
-         "a hash-threshold sample (corpus_sample_stratified's pattern)"),
+         "a hash-threshold sample (curation.stratified_sample's pattern)"),
     ):
         out = _rewrite_calls(
             out,

@@ -79,23 +79,6 @@ def stratified_sample(
     )
 
 
-def STRATIFIED_SAMPLE_SQL(
-    rates_ppm: dict[str, int] | None = None,
-    default_ppm: int = DEFAULT_RATE_PPM,
-    salt: str = "s0",
-) -> str:
-    rates = DEFAULT_RATES_PPM if rates_ppm is None else rates_ppm
-    whens = " ".join(
-        f"WHEN lang = '{lang}' THEN {ppm}" for lang, ppm in sorted(rates.items())
-    )
-    bucket = HASH60_SQL(f"concat('sample-{salt}:', CAST(doc_id AS VARCHAR))")
-    return f"""
-SELECT doc_id, lang, source, n_chars
-FROM documents
-WHERE {bucket} % 1000000 < CASE {whens} ELSE {default_ppm} END
-"""
-
-
 # ---------------------------------------------------------------------------
 # PII scrubbing
 # ---------------------------------------------------------------------------
@@ -637,28 +620,4 @@ SELECT b.doc_id AS bench_doc_id,
 FROM posting b JOIN posting t ON b.sh = t.sh
 WHERE b.doc_id % {bench_mod} = 0 AND t.doc_id % {bench_mod} <> 0
 GROUP BY 1
-"""
-
-
-def CURATE_CORPUS_SQL(min_quality: float = 0.55, min_tokens: int = 8) -> str:
-    return f"""
-WITH q AS ({QUALITY_SCORE_SQL}),
-gated AS (
-  SELECT d.doc_id, d.lang, d.text, q.quality_score, q.n_tokens
-  FROM documents d JOIN q ON d.doc_id = q.doc_id
-  WHERE q.quality_score >= {min_quality} AND q.n_tokens >= {min_tokens}
-),
-keep AS (
-  SELECT min(doc_id) AS doc_id
-  FROM (SELECT doc_id, {HASH60_SQL('text')} AS content_hash FROM gated)
-  GROUP BY content_hash
-),
-survivors AS (
-  SELECT g.lang, g.quality_score, g.n_tokens
-  FROM keep JOIN gated g ON keep.doc_id = g.doc_id
-)
-SELECT lang, count(*) AS n_docs,
-       CAST(sum(n_tokens) AS BIGINT) AS total_tokens,
-       round(avg(quality_score), 4) AS avg_quality
-FROM survivors GROUP BY lang
 """

@@ -278,7 +278,7 @@ def language_mixture_weights(
 
     Plan: one count shuffle to ~|languages| rows, then a single-row
     cross-joined global min — no second pass over the corpus. The rates
-    feed ``corpus_sample_stratified``'s hash-threshold sampler.
+    feed ``curation.stratified_sample``'s hash-threshold sampler.
     """
     share = F.create_map(
         *[F.lit(x) for kv in target_shares.items() for x in kv]

@@ -545,13 +545,6 @@ def daily_counts_pivot(binlog: DataFrame) -> DataFrame:
     )
 
 
-DAILY_PIVOT_SQL = "SELECT strftime(CAST(execute_time AS DATE), '%Y-%m-%d') AS day,\n" + ",\n".join(
-    f"       CAST(count(*) FILTER (WHERE event_type = '{t}') AS BIGINT)"
-    f" AS n_{t.lower()}"
-    for t in PIVOT_EVENT_TYPES
-) + "\nFROM binlog\nGROUP BY 1\n"
-
-
 def daily_counts_moving_avg(binlog: DataFrame, days: int = 7) -> DataFrame:
     """Per-event-type trailing ``days``-row moving average over the daily
     counts — the dashboard smoothing query.

@@ -807,11 +807,7 @@ def scaled_num_centroids(n_vectors: int, target: int = NEAR_DUP_BUCKET_TARGET) -
     BUCKET SIZE constant as the corpus grows, so the within-bucket
     self-join's candidate count is N x target — LINEAR in corpus size —
     where a pinned centroid count makes it N^2 / k (measured: the
-    pinned-16 form went 2.1 s -> 35 s for 10x data at sf1). Round 10
-    adds the derivation; the registry row swaps to it in round 11 when
-    its r09 proof rotates back into the driver window (changing a
-    non-window query's implementation mid-round would void its proof —
-    the similarity_batch_topk rotation lesson)."""
+    pinned-16 form went 2.1 s -> 35 s for 10x data at sf1)."""
     return max(16, n_vectors // target)
 
 

@@ -119,18 +119,6 @@ for _metric in transactions.METRICS:
 # Rollups (A5/A6/A8)
 # ---------------------------------------------------------------------------
 
-# `daily_event_counts` RETIRED round 11 (the VERDICT r09/r10 pre-planned
-# rotation candidate, r09-green and hence IN-window in r11 — retiring it
-# frees a genuine window slot): `daily_event_counts_by_table` below runs
-# the SAME `rollups` operator family on a strict superset of the group
-# keys, so the A5/A6 MV-rollup driver signal is preserved. The freed
-# slot funds the tdigest two-level state read
-# (`ch_agg_states_tdigest_rollup`). Operator + unit tests retained.
-def daily_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5 — MV rollup: daily event-type counts (README.md:174-184)."""
-    return rollups.daily_event_counts(_binlog(spark, sf_dir))
-
-
 @register(
     "daily_event_counts_by_table",
     f"""
@@ -143,20 +131,6 @@ FROM binlog GROUP BY 1, 2, 3, 4
 def daily_event_counts_by_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6 — 4-key MV rollup (README.md:229-245)."""
     return rollups.daily_event_counts_by_table(_binlog(spark, sf_dir))
-
-
-# `daily_counts_pivot` RETIRED round 12 (in-window r10-only-green, so the
-# retirement frees a real window slot — COVERAGE.md retire-on-demand #7;
-# it funds re-proving the implementation-changed `dedup_embedding_cosine`):
-# the pivot is a reshape of the retained 4-key rollup
-# (`daily_event_counts_by_table`) and its conditional-aggregation shape
-# stays driver-proven by `ch_if_combinators_json` (countIf/sumIf) — the
-# operator, its oracle SQL (rollups.DAILY_PIVOT_SQL), its unit tests and
-# its plan-shape test all stay.
-def daily_counts_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIVOT report: days x event-type columns (explicit value list — no
-    schema-discovery job; second shuffle carries only rollup rows)."""
-    return rollups.daily_counts_pivot(_binlog(spark, sf_dir))
 
 
 @register(
@@ -572,19 +546,6 @@ def corpus_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.length_histogram(schemas.load_table(spark, sf_dir, "documents"))
 
 
-# `corpus_sample_stratified` RETIRED round 12 (in-window r10-only-green —
-# COVERAGE.md retire-on-demand #8; it funds re-proving the
-# implementation-changed `similarity_ivf_topk_nprobe`): the retained
-# `corpus_train_test_split` runs the SAME hash-threshold idiom (pure
-# row-local hash(salt, doc_id) against cumulative thresholds — its
-# docstring documents the equivalence) and `corpus_source_cap` keeps the
-# per-stratum gating signal; operator + oracle + tests stay.
-def corpus_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic per-language hash-threshold sampling (zero shuffle,
-    reproducible across engines/runs)."""
-    return curation.stratified_sample(schemas.load_table(spark, sf_dir, "documents"))
-
-
 @register("text_pii_scrub", curation.PII_SCRUB_SQL)
 def text_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Email/IP/phone redaction with per-kind match counts (row-local
@@ -598,28 +559,12 @@ def corpus_top_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     return curation.top_ngrams(schemas.load_table(spark, sf_dir, "documents"), k=25)
 
 
-# `corpus_curate` RETIRED round 10 (in-window r08-only-green, so the
-# retirement frees a real window slot): the operator
-# (`curation.curate_corpus`), its oracle and its tests stay — both
-# in-window siblings keep the driver signal: `corpus_curate_gopher` runs
-# the SAME quality gate + dedup keep-first + per-language stats behind a
-# row-local pre-gate (plan shape pinned identical), and
-# `corpus_curate_materialize` hashes the survivor set itself. The freed
-# slot funds re-proving `similarity_batch_topk`, whose implementation
-# gained the fixed-batch QUERY_ID_CAP this round (its r09 proof no
-# longer describes the shipped code).
-def corpus_curate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end curation: quality gate + exact dedup keep-first +
-    per-language survivor stats (two shuffles total)."""
-    return curation.curate_corpus(schemas.load_table(spark, sf_dir, "documents"))
-
-
 @register("corpus_curate_gopher", curation.CURATE_CORPUS_GOPHER_SQL())
 def corpus_curate_gopher(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``pipeline --gopher`` path end-to-end (cli.py): Gopher rule
     pre-gate, then quality gate + exact dedup keep-first + per-language
     stats. The pre-gate is row-local and fuses into the scan, so the plan
-    keeps corpus_curate's exact 2-shuffle shape (pinned)."""
+    keeps ``curation.curate_corpus``'s exact 2-shuffle shape (pinned)."""
     return curation.curate_corpus_gopher(
         schemas.load_table(spark, sf_dir, "documents")
     )
@@ -678,27 +623,6 @@ def dedup_span_crossdoc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# `dedup_ngram_jaccard` RETIRED round 8 (COVERAGE.md retire-on-demand
-# candidate #1): the operator (`dedup.ngram_jaccard_pairs`), its oracle
-# (`NGRAM_JACCARD_SQL`) and its tests stay — `dedup_ngram_jaccard_staged`
-# below runs the SAME operator + oracle through the materialized-posting
-# front door, so the driver signal is preserved. The freed slot funds
-# `corpus_line_dedup`.
-
-
-# `dedup_minhash_lsh` RETIRED round 9 (COVERAGE.md retire-on-demand
-# candidate #2, in-window in r09 so the retirement frees a real window
-# slot): the operator, its oracle and its tests stay — the `_staged`
-# twin below runs the SAME `dedup.minhash_lsh_pairs` + oracle through
-# the materialized-posting front door, and the r08 sf1 measurement
-# keeps the scale story. The freed slot funds `ch_agg_states_rollup`.
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash(32) + LSH(8x4) candidates, exact-Jaccard verified."""
-    return dedup.minhash_lsh_pairs(
-        schemas.load_table(spark, sf_dir, "documents"), threshold=0.5
-    )
-
-
 @register("dedup_minhash_lsh_staged", dedup.MINHASH_LSH_SQL(threshold=0.5))
 def dedup_minhash_lsh_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH pairs over a MATERIALIZED shingle posting: stage the
@@ -738,39 +662,12 @@ def dedup_ngram_jaccard_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup.ngram_jaccard_pairs(docs, threshold=0.5, posting_path=path)
 
 
-# `corpus_line_dedup` RETIRED round 10 (in-window r08-only-green, so the
-# retirement frees a real window slot): the operator (`dedup.line_dedup`),
-# its oracle (`CORPUS_LINE_DEDUP_SQL`) and its tests stay — the
-# `line_dedup_staged` twin below runs the SAME operator + oracle through
-# the materialized-posting front door (hash-green r09), and
-# tests/test_pipeline_ops.py pins staged==unstaged value parity. The
-# freed slot funds `ch_agg_states_map_rollup` (the sumMap two-level
-# state read, VERDICT r09 next #2).
-def corpus_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-document boilerplate-LINE removal (RefinedWeb/CCNet-style)
-    over a multi-line corpus derived deterministically from the documents
-    table (the generated text is single-line, so paragraph structure is
-    synthesized in-query identically on both engines — see
-    ``dedup.derive_multiline_corpus``). Blank separator lines are exempt
-    from removal (short-line floor); the appended cross-group boilerplate
-    (df ≈ groups/8) is removed from every derived doc.
-
-    Scale shape (``dedup.line_dedup``): explode lines once → 60-bit hash →
-    document frequency via ONE groupBy on the line hash → hash-join the df
-    back (same exchange) → ONE doc groupBy reassembles. No windows over
-    unbounded groups, no pair explosion."""
-    docs = schemas.load_table(spark, sf_dir, "documents")
-    return dedup.line_dedup(
-        dedup.derive_multiline_corpus(docs, groups=40), min_df=2
-    )
-
-
 @register(
     "line_dedup_staged", dedup.CORPUS_LINE_DEDUP_SQL(groups=40, min_df=2)
 )
 def line_dedup_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``corpus_line_dedup`` over a MATERIALIZED line posting (VERDICT
-    r08 what's-wrong #1): the unstaged twin feeds its derivation+explode
+    """``dedup.line_dedup`` over a MATERIALIZED line posting (VERDICT
+    r08 what's-wrong #1): the unstaged operator feeds its derivation+explode
     subtree into BOTH the df-count aggregate and the join-back — Spark
     has no cross-join-side subplan reuse, so the corpus derivation runs
     twice. Here ``dedup.write_line_posting`` stages the exploded
@@ -778,7 +675,7 @@ def line_dedup_staged(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-hashed posting parquet and the documents table never appears in
     the read plan (tests/test_plan_properties.py pins this — the 100 TB
     shape where raw text is split exactly once). Staging is
-    semantics-preserving, so the oracle is the unstaged twin's."""
+    semantics-preserving, so the oracle is the unstaged operator's."""
     import os
     import tempfile
 
@@ -860,16 +757,6 @@ def similarity_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity.brute_force_topk(
         schemas.load_table(spark, sf_dir, "embeddings")
     )
-
-
-# `similarity_ivf_topk` RETIRED round 9 (COVERAGE.md retire-on-demand
-# candidate #3, in-window in r09): the `_nprobe` twin below runs the
-# SAME `similarity.ivf_topk` operator + oracle family (nprobe=2 strictly
-# supersets the nprobe=1 probe set), so the driver signal is preserved.
-# The freed slot funds `line_dedup_staged`.
-def similarity_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed cosine top-10 (scale path: search 1/K of the corpus)."""
-    return similarity.ivf_topk(schemas.load_table(spark, sf_dir, "embeddings"))
 
 
 @register(
@@ -1699,11 +1586,10 @@ def ch_agg_states_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     combinators (what a CH materialized view writes per block), the
     outer -Merge re-aggregates them to the coarser event_type grain —
     merging partials must lose nothing vs a direct one-level aggregate
-    (the DuckDB oracle). Registered round 9 (window-deferred from r08,
-    queries_registry ROTATION BUDGET note); the streaming twin is the
-    Aggregating-MV path proven in tests/test_ddl_compat.py. Spark shape:
-    two partial+final HashAggregates, states carried as typed structs —
-    no UDFs, no extra exchange beyond the two group keys."""
+    (the DuckDB oracle). The streaming twin is the Aggregating-MV path
+    proven in tests/test_ddl_compat.py. Spark shape: two partial+final
+    HashAggregates, states carried as typed structs — no UDFs, no extra
+    exchange beyond the two group keys."""
     from use_clickhouse_2_analyze_mysql_binlog_spark.functions import ch_compat
 
     schemas.load_table(spark, sf_dir, "events").createOrReplaceTempView(
@@ -1888,198 +1774,3 @@ def ch_agg_states_bitmap_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         CH_BITMAP_STATES_SQL,
         table_map={"dashboard.events_all": "events"},
     )
-
-
-TOKENS_PER_SOURCE_SQL = f"""
-WITH toks AS (
-  SELECT source, len({text.TOKENS_SQL("text")}) AS ntok
-  FROM documents
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(ntok) AS BIGINT) AS total_tokens,
-       CAST(max(ntok) AS BIGINT) AS max_doc_tokens,
-       CAST(ceil(sum(ntok) / 512.0) AS BIGINT) AS n_seqs_512
-FROM toks
-GROUP BY source
-"""
-
-
-# `tokens_per_source_stats` RETIRED round 12 (in-window r10-only-green —
-# COVERAGE.md retire-on-demand #9; it funds re-proving the
-# implementation-changed `similarity_lsh_topk`): it is the one-aggregate
-# capacity-planning twin of the retained `sequence_pack` (its own
-# docstring), over the `tokens()` primitive that `text_token_count`
-# keeps driver-proven; operator + oracle + tests stay.
-def tokens_per_source_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trainer shard-sizing audit: per-source document/token totals and the
-    512-budget sequence count (the capacity-planning twin of
-    ``sequence_pack`` — one partial+final aggregate, zero windows)."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark.operators.text import tokens
-
-    docs = schemas.load_table(spark, sf_dir, "documents")
-    return (
-        docs.select("source", F.size(tokens("text")).alias("ntok"))
-        .groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("ntok").cast("long").alias("total_tokens"),
-            F.max("ntok").cast("long").alias("max_doc_tokens"),
-            F.ceil(F.sum("ntok") / 512.0).cast("long").alias("n_seqs_512"),
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering
-# ---------------------------------------------------------------------------
-# The round driver's correctness pass checks the FIRST 50 registry entries in
-# insertion order, so registration order decides which queries get the hard
-# (rows + schema + value-hash) driver signal each round. Policy (COVERAGE.md
-# "Driver-window rotation"):
-#   1. queries with no green driver row in ANY round register first,
-#   2. then queries added or whose implementation changed this round,
-#   3. then the reference-core headline queries (verified every round),
-#   4. then rotation fill — previously-green queries, oldest proof first —
-#      so every registry entry has a green row within the last two rounds.
-# Queries past position 50 all carry a green CORRECTNESS_r04 row.
-#
-# CHANGED_THIS_ROUND is the one per-round edit (tests/test_driver_window.py
-# derives everything else from the two newest committed CORRECTNESS files):
-# queries added this round or whose implementation changed, so their prior
-# driver proof (if any) no longer describes the shipped code.
-#: The round CHANGED_THIS_ROUND was last maintained for (ADVICE r11 #4:
-#: the per-query bench gate only fires on this list, so a stale list
-#: silently un-gates real regressions).
-#: tests/test_driver_window.py::test_changed_this_round_is_fresh derives
-#: the current round from the committed CORRECTNESS files and fails at
-#: next round's start until both constants are re-derived.
-CHANGED_ROUND = 15
-
-CHANGED_THIS_ROUND: list[str] = [
-    # Round 15 (optimization round 2/2 — VERDICT r14 next #1): the
-    # translator's map-State expansion is structurally rewritten to a
-    # two-level GROUP BY (per-key pre-aggregation subquery) so the
-    # exchange carries partial per-key aggregates instead of collected
-    # row lists; results and oracle UNCHANGED, plan changes at every SF.
-    # The only registered consumer of a map-State expansion; r14-green,
-    # so its re-proof takes the round's one free window slot:
-    "ch_agg_states_map_rollup",
-    # implementation-changed (same rewrite, histogram kind): the
-    # quantile/tdigest-State expansion is pre-aggregated the same way.
-    # Already stale-in-window (r13-only-green), so the re-proof slot is
-    # free:
-    "ch_agg_states_tdigest_rollup",
-    # implementation-changed (guide §2.4 — the r14 §8.2 exchange-count
-    # item): `_band_buckets`' bucket cap is a COUNT window instead of a
-    # groupBy+join back onto the bands (one exchange and no join where
-    # there were four and one; output verified row-identical at sf10,
-    # symmetric diff 0). These five are every registered consumer of
-    # the capped band table; all were already stale-in-window
-    # (r13-only-green), so their re-proof slots are free:
-    "dedup_minhash_lsh_staged",
-    "dedup_apply_minhash",
-    "dedup_incremental",
-    "dedup_connected_components",
-    "dedup_apply_connected_components",
-    # NOT listed although `write_line_posting` gained the same
-    # scale-adaptive partition derivation as the shingle posting (r15):
-    # at every driver SF the derivation returns the historical constant
-    # 8, so `line_dedup_staged`'s staged layout and plan there are
-    # bit-identical — the same below-the-gate argument (and the same
-    # derivation function + test pin, test_posting_partition_derivation)
-    # as r14's shingle-posting non-listing. Likewise the DISK_ONLY/
-    # batch-size cache policy (operators/cachetrack.py) is gated on a
-    # 256 MiB backing size no driver SF reaches, so no cache-consumer
-    # plan or layout changes below it.
-]
-# ROTATION BUDGET (round 15): 44 queries are green only in
-# CORRECTNESS_r13 (recomputed from the committed r13/r14 files); with
-# the 5 headline rows that fills 49 of the 50 window slots, leaving
-# EXACTLY ONE slot for a changed query that is not already stale.
-# Slot ledger:
-#   1. `ch_agg_states_map_rollup` — the -State pre-aggregation rewrite
-#      voids its r14 proof; takes the free slot (window exactly full).
-# Consequence for this optimization round: every other plan-affecting
-# change must either target a query already in the stale set (e.g.
-# `ch_agg_states_tdigest_rollup`, `dedup_minhash_lsh_staged` — free
-# re-proof slots) or sit behind a size gate that keeps driver-SF plans
-# bit-identical (the r14 posting-derivation / two-level-dispatch
-# pattern, pinned by plan-diff tests).
-
-DRIVER_WINDOW_PRIORITY = [
-    # -- 1. implementation-changed this round (round 15) with a voided
-    #       proof — no valid driver proof until CORRECTNESS_r15:
-    "ch_agg_states_map_rollup",
-    # -- 2. green only in CORRECTNESS_r13 (rotated out of the r14
-    #       window); their proof ages out of the 2-round invariant
-    #       unless re-verified in r15. Exactly the 44 registry queries
-    #       green in r13 but absent from CORRECTNESS_r14.json's green
-    #       set.
-    "aggregating_rollup_merge",
-    "benchmark_contamination",
-    "ch_agg_states_bitmap_rollup",
-    "ch_agg_states_rollup",
-    "ch_agg_states_tdigest_rollup",
-    "ch_prewhere_profile",
-    "ch_top_event_limit_by",
-    "collapsing_merge_state",
-    "corpus_source_cap",
-    "corpus_top_bigrams",
-    "daily_count_anomalies",
-    "daily_distinct_gtids_approx",
-    "daily_distinct_gtids_approx_check",
-    "daily_event_counts_by_table",
-    "dedup_apply_connected_components",
-    "dedup_apply_minhash",
-    "dedup_connected_components",
-    "dedup_exact",
-    "dedup_incremental",
-    "dedup_minhash_lsh_staged",
-    "dedup_simhash",
-    "dedup_simhash_pairs",
-    "dedup_span_crossdoc",
-    "doc_chunks",
-    "doc_fingerprint",
-    "embedding_kmeans",
-    "embedding_kmeans_assign",
-    "embedding_kmeans_inertia_check",
-    "embedding_quantization_error",
-    "language_mixture_weights",
-    "large_order_customers",
-    "line_dedup_staged",
-    "multimodal_features",
-    "multimodal_frame_sample",
-    "multimodal_resize",
-    "order_priority_counts",
-    "promo_revenue",
-    "quality_gopher_flags",
-    "replacing_merge_final",
-    "retention_cohorts",
-    "sequence_pack",
-    "similarity_ivf_topk_two_level",
-    "size_quantiles_approx",
-    "size_quantiles_approx_check",
-    # -- 3. reference-core headline queries (verified every round)
-    "transaction_stats",
-    "top_transaction_by_size",
-    "top_transaction_by_spend_time",
-    "top_transaction_by_affected_rows",
-    "transaction_result_table",
-    # -- (1 re-proof + 44 stale + 5 headline = 50 priority entries:
-    #       the window is exactly full. See the ROTATION BUDGET note
-    #       above.)
-]
-
-
-def _apply_driver_window_priority() -> None:
-    """Reorder QUERIES in place (callers hold references to the dict)."""
-    snapshot = dict(QUERIES)
-    QUERIES.clear()
-    for name in DRIVER_WINDOW_PRIORITY:
-        if name in snapshot:
-            QUERIES[name] = snapshot.pop(name)
-    QUERIES.update(snapshot)
-
-
-_apply_driver_window_priority()
