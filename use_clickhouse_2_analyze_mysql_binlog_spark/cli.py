@@ -647,7 +647,7 @@ def main(argv: list[str] | None = None) -> int:
             max_offsets_per_trigger=args.sync,
         )
         raw = kafka.read_stream(spark, cfg)
-        # pb2 if installed, else wire codec; --dead-letter switches the
+        # canal wire codec; --dead-letter switches the
         # poison-message contract from fail-loud to route-and-drain
         entries = canal.decode_packets(
             raw, on_error="route" if args.dead_letter else "fail"

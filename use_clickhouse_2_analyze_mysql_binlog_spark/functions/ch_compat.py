@@ -272,6 +272,7 @@ Spark's parser rather than silently changing semantics.
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -694,6 +695,44 @@ def _log_quantize(x: str) -> str:
     )
 
 
+def _sum_cap(v: str) -> str:
+    """A zero whose type only serves as a coercion witness: ints widen to
+    bigint, doubles stay double, decimals reach the precision-38 cap (the
+    second product always passes 38, so Spark may cut its scale)."""
+    return f"(CAST(0 AS BIGINT) * {v} * CAST(0 AS BIGINT))"
+
+
+def _sum_value(v: str) -> str:
+    """``v`` in the sumMap state's value type: bigint for ints, double for
+    doubles, decimal(38, s) for decimal(p, s) with s <= 6. The IF
+    branches coerce to their wider type, so no arithmetic rounds ``v``."""
+    return f"IF(false, {_sum_cap(v)}, {v})"
+
+
+def _sum_zero(v: str) -> str:
+    """A zero (NULL for a NULL ``v``) of :func:`_sum_value`'s type; as a
+    fold seed, ``+ v`` keeps that type."""
+    return f"IF(false, {v}, {_sum_cap(v)})"
+
+
+def _sum_scale_guard(v: str, expr: str, lit: Callable[[str], str]) -> str:
+    """``expr``, or an error when ``v`` is a decimal of scale > 6. Under
+    Spark's default decimal precision-loss rule, a sum at precision 38
+    keeps at most 6 fractional digits, so such a sumMap state would be
+    rounded; it raises instead. ``typeof`` folds to a constant, so other
+    value types pay nothing. ``lit`` emits a masked string literal."""
+    return (
+        f"IF(typeof({v}) RLIKE "
+        + lit("^decimal[(][0-9]+,([7-9]|[1-3][0-9])[)]$")
+        + ", raise_error("
+        + lit(
+            "sumMap over decimals of scale above 6 would round to scale 6;"
+            " cast the values to a scale of 6 or less"
+        )
+        + f"), {expr})"
+    )
+
+
 # --------------------------------------------------------------------------
 # -State pre-aggregation structural rewrite (round 15, VERDICT r14 next #1).
 #
@@ -725,12 +764,10 @@ def _log_quantize(x: str) -> str:
 #   the fold's `acc + NULL` propagation) is reproduced with the
 #   count(*) > count(v) guard; min/max skip NULLs exactly like
 #   array_min/array_max;
-# - the sum element type is widened with the same typed zero
-#   (CAST(0 AS BIGINT) * v) as the fold accumulator. (Documented
-#   narrowing: for decimal values of precision < 17 the declared result
-#   precision is the sum()'s p+10-capped-38 rather than the fold's
-#   21+p-capped-38 — values identical, and no translated consumer
-#   declares decimal map states.)
+# - the sum element type is widened by :func:`_sum_value` to the type
+#   of the fold accumulator (:func:`_sum_zero`), so both paths declare
+#   the DDL's map value type (decimal(p, s) -> decimal(38, s)); decimal
+#   scales above 6 raise in both (:func:`_sum_scale_guard`);
 # - histogram states bucket-count with count(*) per (keys, value) group;
 #   NULL values form a marker group that is dropped after the collect,
 #   matching collect_list's NULL-skip.
@@ -769,26 +806,6 @@ _HIST_STATE_FNS = (
 
 def _norm_expr(e: str) -> str:
     return re.sub(r"\s+", " ", e.strip()).lower()
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split at paren/bracket-depth-0 commas (string literals are masked
-    before any rewrite runs)."""
-    parts: list[str] = []
-    cur: list[str] = []
-    depth = 0
-    for c in s:
-        if c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        if c == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    parts.append("".join(cur))
-    return parts
 
 
 def _find_top_level_kw(
@@ -906,9 +923,10 @@ def _item_alias(it: str) -> str | None:
     return None
 
 
-def _two_level_block(block: str) -> str | None:
+def _two_level_block(block: str, lit: Callable[[str], str]) -> str | None:
     """Rewrite one SELECT block to the two-level pre-aggregated form, or
-    None when the block does not have the safe shape."""
+    None when the block does not have the safe shape. ``lit`` emits a
+    masked string literal."""
     m = re.match(r"(?is)\s*SELECT\s+", block)
     if m is None or re.match(r"(?is)\s*SELECT\s+DISTINCT\b", block):
         return None
@@ -916,7 +934,9 @@ def _two_level_block(block: str) -> str | None:
     fr = _find_top_level_kw(block, r"\bFROM\b", sel_start)
     if fr is None:
         return None
-    items = [i.strip() for i in _split_top_level(block[sel_start : fr[0]])]
+    items = [
+        i.strip() for i in _split_top_level_commas(block[sel_start : fr[0]])
+    ]
     gb = _find_top_level_kw(block, r"\bGROUP\s+BY\b", fr[1])
     if gb is None:
         return None
@@ -933,7 +953,7 @@ def _two_level_block(block: str) -> str | None:
     # parser does not understand
     if _find_top_level_kw(block, r"\bGROUP\s+BY\b", gb[1]) is not None:
         return None
-    gb_items = [g.strip() for g in _split_top_level(gb_tail)]
+    gb_items = [g.strip() for g in _split_top_level_commas(gb_tail)]
     gb_items = [g.rstrip("; \n\t") for g in gb_items]
     if not gb_items or not all(gb_items):
         return None
@@ -999,7 +1019,7 @@ def _two_level_block(block: str) -> str | None:
             return {
                 "sum": (
                     f"IF(count(*) > count({v}), NULL, "
-                    f"sum(CAST(0 AS BIGINT) * {v} + {v}))"
+                    f"sum({_sum_scale_guard(v, _sum_value(v), lit)}))"
                 ),
                 "min": f"min({v})",
                 "max": f"max({v})",
@@ -1067,7 +1087,7 @@ def _two_level_block(block: str) -> str | None:
     )
 
 
-def _rewrite_state_two_level(sql: str) -> str:
+def _rewrite_state_two_level(sql: str, lit: Callable[[str], str]) -> str:
     """Apply :func:`_two_level_block` to every qualifying SELECT block
     containing a map-/histogram-State call; non-qualifying calls are left
     for the expression-level expansions."""
@@ -1082,7 +1102,9 @@ def _rewrite_state_two_level(sql: str) -> str:
         if found is None:
             return sql
         blk = _enclosing_select_block(sql, found[1][0])
-        new_block = _two_level_block(sql[blk[0] : blk[1]]) if blk else None
+        new_block = (
+            _two_level_block(sql[blk[0] : blk[1]], lit) if blk else None
+        )
         if new_block is None:
             pos = found[1][1]  # leave this call to the fallback expansion
             continue
@@ -1524,6 +1546,7 @@ def _owning_select_items(sql: str, pos: int) -> list[str]:
 
 
 def _split_top_level_commas(text: str) -> list[str]:
+    """Split at paren/bracket-depth-0 commas, skipping quoted text."""
     parts: list[str] = []
     depth, start, i, n = 0, 0, 0, len(text)
     while i < n:
@@ -4328,10 +4351,9 @@ def translate(
     # per-group map from the (keys, values) parallel arrays; -Merge
     # folds the maps key-wise and finalizes to the plain sumMap return
     # shape (struct keys/values, keys sorted). The per-key sum starts
-    # from ``CAST(0 AS BIGINT) * v`` — a typed zero that widens ints to
-    # bigint, floats to double, decimals to the precision-38 cap, so the
-    # fold accumulator type is a fixed point (decimal sums would
-    # otherwise grow precision each step and fail analysis).
+    # from :func:`_sum_zero`, so the fold accumulator type is a fixed
+    # point (decimal sums would otherwise grow precision each step and
+    # fail analysis).
     def _map_state(which, ch_fn):
         def build(a):
             if len(a) != 2:
@@ -4360,9 +4382,13 @@ def translate(
                 # the typed-zero seed needs vals twice — bind it too
                 "sum": (
                     f"element_at(transform(array({vals}), __vs -> "
-                    "aggregate(__vs, "
-                    "CAST(0 AS BIGINT) * element_at(__vs, 1), "
-                    "(__s, __v) -> __s + __v)), 1)"
+                    + _sum_scale_guard(
+                        "element_at(__vs, 1)",
+                        f"aggregate(__vs, {_sum_zero('element_at(__vs, 1)')}, "
+                        "(__s, __v) -> __s + __v)",
+                        _masked_lit,
+                    )
+                    + "), 1)"
                 ),
                 "min": f"array_min({vals})",
                 "max": f"array_max({vals})",
@@ -4414,7 +4440,7 @@ def translate(
     # per-key aggregates instead of collected row lists; everything the
     # structural pass declines falls through to the expression-level
     # expansions below, unchanged.
-    out = _rewrite_state_two_level(out)
+    out = _rewrite_state_two_level(out, _masked_lit)
 
     for _which, _ch in (("sum", "sumMap"), ("min", "minMap"), ("max", "maxMap")):
         out = _rewrite_calls(

@@ -1,25 +1,19 @@
 """Session-scoped registry of family-shared persisted DataFrames.
 
-Round 15 (VERDICT r14 next #4): a full bench sweep used to leave every
-family's persisted caches resident to the end of the run (~1.5-2 GB at
-sf10 — shingle posting, per-doc hash sets, band buckets, flagged corpus,
-centroid assignments), squeezing the execution pool under the
-aggregation-heavy rows late in the sweep and producing the documented
-2-4x in-sweep inflation. Operators now ``track()`` each shared persisted
-DataFrame under a small site tag; the bench releases a tag's caches right
-after the tag's LAST consumer in the run sequence (derived empirically —
-``tests/test_bench_cache_release.py`` re-derives the consumer sets from
-the live registry and pins the release points against them).
+Operators ``track()`` each shared persisted DataFrame (shingle posting,
+per-doc hash sets, band buckets, flagged corpus, centroid assignments)
+under a small site tag, so a caller can drop them: ``release(tag)`` for
+one family, ``release_all()`` for every family. The benchmarks release
+everything before each timed query, so every query builds the caches it
+needs inside its own timed region.
 
 Releasing is always safe for correctness: ``unpersist`` only drops cached
-data, a later (unexpected) consumer recomputes from the parquet inputs.
-Nothing here persists across sessions or runs — the registry is plain
-module state keyed by nothing, cleared as it is released.
+data, a later consumer recomputes from the parquet inputs. Nothing here
+persists across sessions or runs — the registry is plain module state
+keyed by nothing, cleared as it is released.
 
-``touch()`` records tag USE for the empirical derivation when a memoized
-builder returns an already-tracked DataFrame (the memo hit calls no
-``persist``). ``register_release_hook`` lets a module attach memo-dict
-cleanup to a tag so a released cache cannot be served stale from a memo.
+``register_release_hook`` lets a module attach memo-dict cleanup to a tag
+so a released cache cannot be served stale from a memo.
 """
 
 from __future__ import annotations
@@ -29,7 +23,6 @@ from typing import Callable
 from pyspark.sql import DataFrame
 
 _TRACKED: dict[str, list[DataFrame]] = {}
-_TOUCHED: set[str] = set()
 _RELEASE_HOOKS: dict[str, list[Callable[[], None]]] = {}
 
 
@@ -37,24 +30,7 @@ def track(df: DataFrame, tag: str) -> DataFrame:
     """Register a freshly persisted family-shared DataFrame under ``tag``
     and return it (call sites wrap their ``persist()``)."""
     _TRACKED.setdefault(tag, []).append(df)
-    _TOUCHED.add(tag)
     return df
-
-
-def touch(tag: str) -> None:
-    """Record use of ``tag`` without a new persist (memo hits)."""
-    _TOUCHED.add(tag)
-
-
-def drain_touched() -> set[str]:
-    """Tags used since the last drain (consumer-set derivation)."""
-    out = set(_TOUCHED)
-    _TOUCHED.clear()
-    return out
-
-
-def tracked_tags() -> set[str]:
-    return set(_TRACKED)
 
 
 def register_release_hook(tag: str, hook: Callable[[], None]) -> None:

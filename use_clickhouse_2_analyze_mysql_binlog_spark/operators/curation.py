@@ -211,11 +211,8 @@ def flagged_documents(documents: DataFrame, persist: bool = True) -> DataFrame:
     """
     from .memo import df_memo_key
 
-    from .cachetrack import touch
-
     key = df_memo_key(documents, "flagged") if persist else None
     if key is not None and key in _FLAGGED_MEMO:
-        touch("flagged")
         return _FLAGGED_MEMO[key]
     d = with_quality(documents).withColumn("toks", tokens("text"))
     _, f_words, f_avg, f_stop, f_uniq = _gopher_rules()

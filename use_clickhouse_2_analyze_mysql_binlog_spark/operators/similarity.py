@@ -1074,9 +1074,6 @@ def assign_ivf_buckets_scaled(
     if persist:
         memo_key = _assign_memo_key(embeddings, num_centroids, "flat")
         if memo_key is not None and memo_key in _ASSIGN_MEMO:
-            from .cachetrack import touch
-
-            touch("assign")
             return _ASSIGN_MEMO[memo_key]
 
     fine_ids, fine_mat = _collect_normalized_prefix(embeddings, num_centroids)
@@ -1208,9 +1205,6 @@ def assign_ivf_buckets_two_level(
     if persist:
         memo_key = _assign_memo_key(embeddings, num_centroids, "two_level")
         if memo_key is not None and memo_key in _ASSIGN_MEMO:
-            from .cachetrack import touch
-
-            touch("assign")
             return _ASSIGN_MEMO[memo_key]
     book = _two_level_codebook(embeddings, num_centroids)
     if book is None:

@@ -5,15 +5,13 @@ a ``Packet`` whose ``body`` holds ``Messages`` (repeated ``Entry`` bytes);
 each ``Entry`` has a ``Header`` and a ``storeValue`` that decodes to a
 ``RowChange`` (``/root/reference/mon_mysql_dml.py:150-169, 254-255``).
 
-The PRIMARY decode path is the dependency-free wire-format codec in
+The decode path is the dependency-free wire-format codec in
 :mod:`canal_wire` (golden-bytes pinned against the public protocol),
-Arrow-batched through ``mapInPandas``. The production entry point
-(:func:`decode_packets`) upgrades to the real canal ``*_pb2`` modules when
-importable (same output dicts);
-:func:`decode_packets_with` is the underlying Arrow-batched ``mapInPandas``
-runner for any packet-parsing callable. The downstream transform
-(sources/transform.py) is identical on every path — decode yields
-CANAL_ENTRY_SCHEMA rows.
+Arrow-batched through ``mapInPandas`` by :func:`decode_packets`;
+:func:`decode_packets_with` is the underlying runner for any
+packet-parsing callable (tests inject their own). Decode yields
+CANAL_ENTRY_SCHEMA rows for the downstream transform
+(sources/transform.py).
 """
 
 from __future__ import annotations
@@ -27,61 +25,10 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from use_clickhouse_2_analyze_mysql_binlog_spark.schemas import CANAL_ENTRY_SCHEMA
+from use_clickhouse_2_analyze_mysql_binlog_spark.sources import canal_wire
 
 #: entry dict keys produced by a packet parser, matching CANAL_ENTRY_SCHEMA
 PacketParser = Callable[[bytes], list[dict[str, Any]]]
-
-
-def _try_import_canal():
-    try:
-        import CanalProtocol_pb2  # type: ignore  # noqa: F401
-        import EntryProtocol_pb2  # type: ignore
-
-        return EntryProtocol_pb2
-    except ImportError:
-        return None
-
-
-def parse_packet_canal(raw: bytes) -> list[dict[str, Any]]:
-    """Parse one canal Packet into entry dicts using the real pb2 modules.
-
-    Mirrors the nesting walked at mon_mysql_dml.py:150-169 (Packet ->
-    Messages -> Entry) and :254-316 (Header fields + RowChange.storeValue).
-    Raises ImportError when the canal protobuf modules are absent.
-    """
-    import CanalProtocol_pb2  # type: ignore
-    import EntryProtocol_pb2  # type: ignore
-
-    packet = CanalProtocol_pb2.Packet()
-    packet.MergeFromString(raw)
-    messages = CanalProtocol_pb2.Messages()
-    messages.MergeFromString(packet.body)
-    out: list[dict[str, Any]] = []
-    for raw_entry in messages.messages:
-        entry = EntryProtocol_pb2.Entry()
-        entry.MergeFromString(raw_entry)
-        row_change = EntryProtocol_pb2.RowChange()
-        row_change.MergeFromString(entry.storeValue)
-        h = entry.header
-        out.append(
-            {
-                "entryType": EntryProtocol_pb2.EntryType.Name(entry.entryType),
-                "header": {
-                    "schemaName": h.schemaName,
-                    "tableName": h.tableName,
-                    "logfileName": h.logfileName,
-                    "logfileOffset": h.logfileOffset,
-                    "serverenCode": h.serverenCode,
-                    "executeTime": h.executeTime,
-                    "eventLength": h.eventLength,
-                    "gtid": h.gtid,
-                    "eventType": h.eventType,
-                },
-                "isDdl": bool(row_change.isDdl),
-                "rowDatas": [{"dummy": 0} for _ in row_change.rowDatas],
-            }
-        )
-    return out
 
 
 #: CANAL_ENTRY_SCHEMA plus the dead-letter routing columns: good entries
@@ -153,22 +100,13 @@ def decode_packets_with(
 
 
 def decode_packets(raw_df: DataFrame, on_error: str = "fail") -> DataFrame:
-    """Production decode path.
-
-    Prefers the real canal pb2 modules when installed; otherwise falls back
-    to :func:`canal_wire.parse_packet_wire`, a dependency-free pure-Python
-    codec for the same public wire format (identical output dicts — pinned
-    by a golden-bytes test). Either way the parse runs Arrow-batched inside
+    """Production decode path: :func:`canal_wire.parse_packet_wire`, a
+    dependency-free pure-Python codec for the public canal wire format
+    (pinned by a golden-bytes test), run Arrow-batched inside
     ``mapInPandas``, one python worker per Kafka partition. See
     :func:`decode_packets_with` for the ``on_error`` poison-message modes.
     """
-    if _try_import_canal() is None:
-        from use_clickhouse_2_analyze_mysql_binlog_spark.sources.canal_wire import (
-            parse_packet_wire,
-        )
-
-        return decode_packets_with(raw_df, parse_packet_wire, on_error=on_error)
-    return decode_packets_with(raw_df, parse_packet_canal, on_error=on_error)
+    return decode_packets_with(raw_df, canal_wire.parse_packet_wire, on_error)
 
 
 # NOTE on the from_protobuf alternative (removed; VERDICT r04 #2): Spark
@@ -179,7 +117,7 @@ def decode_packets(raw_df: DataFrame, on_error: str = "fail") -> DataFrame:
 # Entry -> RowChange(storeValue). That requires the spark-protobuf jar,
 # which is NOT bundled with pyspark and cannot be fetched here (verified:
 # calling it raises PROTOBUF_NOT_LOADED_SQL_FUNCTIONS_UNUSABLE), so the
-# engine ships the wire codec as the primary decode path instead of
+# engine ships the wire codec as its only decode path instead of
 # carrying an untestable code path. A deployment with the jar on the
 # classpath can swap decode_packets for the from_protobuf chain without
 # touching anything downstream — every path yields CANAL_ENTRY_SCHEMA

@@ -1,15 +1,15 @@
 """Pure-Python protobuf wire-format codec for the public alibaba/canal
 protocol (``CanalProtocol.proto`` / ``EntryProtocol.proto``).
 
-The environment has neither protoc, the protobuf runtime, nor the
-spark-protobuf JVM package, so the pb2 decode path
-(``canal.parse_packet_canal``) and the ``from_protobuf`` path cannot run.
-The protobuf *wire format* itself is public and small — varints plus
-length-delimited fields — and the canal decode walked by the reference
+The engine depends on neither protoc, the protobuf runtime, nor the
+spark-protobuf JVM package, so neither generated ``*_pb2`` modules nor
+``from_protobuf`` are available to it. The protobuf *wire format*
+itself is public and small — varints plus length-delimited fields —
+and the canal decode walked by the reference
 (``mon_mysql_dml.py:150-169, 254-316``) touches only a handful of
 scalar/string/bytes fields. This module implements exactly that subset,
 giving :func:`canal.decode_packets` a dependency-free production parser
-with the same output as the pb2 path.
+whose output matches what the pb2 accessors would give.
 
 Field numbers are taken from the public alibaba/canal protocol
 definitions; each table below names its message. The encoder half exists
@@ -136,11 +136,10 @@ def _i64(fd: dict[int, list[Any]], field: int) -> int:
 
 
 def parse_packet_wire(raw: bytes) -> list[dict[str, Any]]:
-    """Parse one canal ``Packet`` into CANAL_ENTRY_SCHEMA-shaped dicts —
-    the dependency-free twin of ``canal.parse_packet_canal`` (same nesting:
-    Packet.body -> Messages.messages -> Entry; Header fields +
-    RowChange.storeValue). Absent proto3 fields yield ''/0/False exactly
-    like the pb2 accessors."""
+    """Parse one canal ``Packet`` into CANAL_ENTRY_SCHEMA-shaped dicts,
+    walking the reference's nesting (Packet.body -> Messages.messages ->
+    Entry; Header fields + RowChange.storeValue). Absent proto3 fields
+    yield ''/0/False exactly like the pb2 accessors."""
     packet = fields_dict(raw)
     bodies = packet.get(PACKET_BODY)
     if not bodies:
