@@ -200,6 +200,112 @@ def test_window_job_matches_batch_and_drops_late(spark, tmp_path, binlog_df):
         assert got.exceptAll(w).count() == 0 and w.exceptAll(got).count() == 0, stem
 
 
+def _rows(df) -> list[tuple]:
+    return sorted(map(tuple, df.collect()), key=repr)
+
+
+def test_top_transactions_all_matches_per_metric_ranking(spark, binlog_df):
+    """The one-exchange three-metric ranking the window publish uses must
+    pick, per window and metric, the row ``top_transactions`` picks: ties
+    on the metric go to the smallest gtid, NULL metrics rank last."""
+    cols = [
+        "window_start", "end_time", "gtid", "transaction_spend_time",
+        "transaction_size", "transaction_affected_rows", "statement_count",
+    ]
+    edge = spark.createDataFrame(
+        [
+            # w1: size tie (g2, g1 -> g1), spend NULL on the top-size row
+            ("w1", "e1", "g2", None, 10, 1, 1),
+            ("w1", "e1", "g1", 5, 10, 2, 1),
+            ("w1", "e1", "g3", 7, 3, None, 1),
+            # w2: one metric all NULL -> smallest gtid among NULLs
+            ("w2", "e2", "g9", 1, None, 4, 1),
+            ("w2", "e2", "g8", 1, None, 4, 1),
+            # w3: a single transaction wins every metric
+            ("w3", "e3", "g5", None, None, None, 1),
+        ],
+        "window_start string, end_time string, gtid string, "
+        "transaction_spend_time long, transaction_size long, "
+        "transaction_affected_rows long, statement_count long",
+    )
+    winners = {
+        "transaction_size": {"w1": "g1", "w2": "g8", "w3": "g5"},
+        "transaction_spend_time": {"w1": "g3", "w2": "g8", "w3": "g5"},
+        "transaction_affected_rows": {"w1": "g1", "w2": "g8", "w3": "g5"},
+    }
+    real = transactions.transaction_stats(binlog_df)
+    for stats in (edge, real):
+        ranked = transactions.top_transactions_all(stats).cache()
+        for metric in transactions.METRICS:
+            one = transactions.top_transactions(stats, metric)
+            all_ = ranked.filter(
+                F.col(transactions.rank_column(metric)) == 1
+            ).select(*cols)
+            assert _rows(all_) == _rows(one.select(*cols)), metric
+            if stats is edge:
+                got = {r.window_start: r.gtid for r in all_.collect()}
+                assert got == winners[metric], metric
+        ranked.unpersist()
+    plan = transactions.top_transactions_all(edge)._jdf.queryExecution()
+    assert plan.executedPlan().toString().count("Exchange hashpartitioning") == 1
+
+
+def test_window_publish_stages_results_from_driver(spark, tmp_path, binlog_df):
+    """The publish of a non-empty batch: a pinned number of Spark jobs (the
+    two shuffle stages and the Arrow collect, no writes), result tables
+    that read back with the names and types of Spark-written ones, and a
+    replay that replaces what a crashed attempt staged."""
+    import shutil
+
+    sc = spark.sparkContext
+    stats = transactions.transaction_stats(binlog_df)
+    results = str(tmp_path / "results")
+    publish = window_job.make_publish_batch(results)
+
+    prev_group = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setJobGroup("window-publish", "window-publish")
+    try:
+        publish(stats, 0)
+    finally:
+        jobs = sc.statusTracker().getJobIdsForGroup("window-publish")
+        sc.setLocalProperty("spark.jobGroup.id", prev_group)
+    assert len(jobs) == 3, jobs
+
+    spark_written = epochs.TxnSink(str(tmp_path / "spark"), ())
+    for metric, stem in transactions.METRICS.items():
+        spark_written.write(
+            stem, 0, transactions.transaction_result_table(stats, metric)
+        )
+    spark_written.commit(0)
+    for stem in transactions.METRICS.values():
+        got = window_job.read_results(spark, results, stem)
+        want = spark_written.read(spark, stem)
+        assert got.dtypes == want.dtypes, stem
+        assert _rows(got) == _rows(want), stem
+
+    # a crashed attempt of epoch 1 staged its dirs plus a stray file ...
+    stem = next(iter(transactions.METRICS.values()))
+    crashing = window_job.make_publish_batch(results)
+
+    def crash_commit(self, epoch_id):
+        raise RuntimeError("injected crash before commit")
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(epochs.TxnSink, "commit", crash_commit)
+        with pytest.raises(RuntimeError):
+            crashing(stats, 1)
+    staged = epochs.TxnSink(results, ()).epoch_dir(stem, 1)
+    shutil.copy(
+        os.path.join(staged, "part-00000.parquet"),
+        os.path.join(staged, "part-99999.parquet"),
+    )
+    n = window_job.read_results(spark, results, stem).count()
+    # ... the replay replaces it whole, then commits
+    publish(stats, 1)
+    assert os.listdir(staged) == ["part-00000.parquet"]
+    assert window_job.read_results(spark, results, stem).count() == 2 * n
+
+
 def test_foreachbatch_bodies_are_replay_idempotent(spark, tmp_path, binlog_df):
     """A crash between sink write and checkpoint commit replays the epoch
     with the same id; every foreachBatch body must make that a no-op
@@ -949,18 +1055,34 @@ def test_collapsing_upsert_stream_matches_batch(spark, tmp_path):
     assert want.exceptAll(got2).count() == 0
 
 
+def _written_plans(body, batches) -> list[str]:
+    """Run an epoch body over ``batches`` (epochs 0, 1, ...) and return the
+    physical plan of every DataFrame it hands to a parquet write."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    plans = []
+    real = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        plans.append(self._df._jdf.queryExecution().executedPlan().toString())
+        return real(self, path, *args, **kwargs)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(DataFrameWriter, "parquet", spy)
+        for epoch, batch in enumerate(batches):
+            body(batch, epoch)
+    return plans
+
+
 def test_upsert_snapshot_write_is_partitioned(spark, tmp_path, binlog_df):
     """VERDICT r05 what's-wrong #2: the row-state snapshot is the live-key
     working set of the source fleet, so it must NOT funnel through one
     writer task per epoch. Pins (a) the on-disk layout is directory-
-    partitioned by (schema, table), (b) no Coalesce/SinglePartition rail
-    feeds the state write — the MERGE's sort-key hash exchange is the
-    only repartitioning, and (c) the restored read schema round-trips
-    (canonical column order, string partition columns)."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark.operators import merge_tree
-    from use_clickhouse_2_analyze_mysql_binlog_spark.sources.transform import (
-        canal_entries_to_binlog,
-    )
+    partitioned by (schema, table), (b) the DataFrame the epoch body
+    writes has exactly one hash exchange — the merge's sort-key exchange,
+    the batch rows merging with the previous snapshot in one aggregation —
+    and no Coalesce/SinglePartition rail, and (c) the restored read schema
+    round-trips (canonical column order, string partition columns)."""
     from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import upsert_job
 
     binlog = canal_entries_to_binlog(
@@ -971,35 +1093,47 @@ def test_upsert_snapshot_write_is_partitioned(spark, tmp_path, binlog_df):
     # plan this test asserts clean
     state = str(tmp_path / "state")
     body = upsert_job.make_upsert_batch(spark, state)
-    body(binlog, 0)
-    body(binlog, 1)  # epoch 1 exercises the prev-MERGE write path
+    # epoch 1 exercises the prev-MERGE write path
+    plans = _written_plans(body, [binlog, binlog])
 
     # (a) partitioned layout on disk
     import pathlib
 
-    latest = __import__(
-        "use_clickhouse_2_analyze_mysql_binlog_spark.streaming.epochs",
-        fromlist=["epochs"],
-    ).read_manifest(state)
+    latest = epochs.read_manifest(state)
     snap = pathlib.Path(latest["dir"])
     part_dirs = sorted(p.name for p in snap.glob("schema=*/table=*"))
     assert part_dirs, f"no (schema, table) partition dirs under {snap}"
 
-    # (b) the DataFrame feeding the write (same construction as the epoch
-    # body) plans as hash exchanges only — no single-task rail
-    finals = merge_tree.replacing_merge_final(merge_tree.dml_rows(binlog))
-    prev = upsert_job._read_snapshot(spark, latest["dir"])
-    merged = merge_tree.merge_final_states(prev, finals)
-    plan = merged._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange hashpartitioning" in plan, plan
-    assert "Exchange SinglePartition" not in plan, plan
-    assert "Coalesce 1" not in plan, plan
+    # (b) one hash exchange per epoch, no single-task rail
+    assert len(plans) == 2, plans
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+        assert "Exchange SinglePartition" not in plan, plan
+        assert "Coalesce 1" not in plan, plan
 
     # (c) restored read schema: canonical order, string partition cols
     got = upsert_job.read_state(spark, state)
     assert got.columns[:3] == ["schema", "table", "row_pk"]
     assert dict(got.dtypes)["schema"] == "string"
     assert dict(got.dtypes)["table"] == "string"
+
+
+def test_rollup_merge_write_has_one_exchange(spark, tmp_path, binlog_df):
+    """The rollup epoch re-sums the batch rows (as counts of 1) with the
+    previous snapshot in one aggregation: one hash exchange per epoch,
+    the first epoch (no snapshot yet) included."""
+    body = rollup_job.make_merge_batch(
+        spark, str(tmp_path / "rollup"), ("day", "event_type")
+    )
+    batches = [binlog_df.filter(F.col("binlog_pos") % 2 == k) for k in range(2)]
+    plans = _written_plans(body, batches)
+    assert len(plans) == 2, plans
+    for plan in plans:
+        assert plan.count("Exchange hashpartitioning") == 1, plan
+    got = rollup_job.read_rollup(spark, str(tmp_path / "rollup"))
+    want = rollups.daily_event_counts(binlog_df)
+    assert got.exceptAll(want.select(*got.columns)).count() == 0
+    assert got.count() == want.count()
 
 
 def test_upsert_snapshot_numeric_table_names_roundtrip(spark, tmp_path):

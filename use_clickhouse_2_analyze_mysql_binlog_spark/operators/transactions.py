@@ -31,6 +31,8 @@ most-time-consuming / most-affected-rows swapped at
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -86,6 +88,13 @@ def transaction_stats(
     )
 
 
+def _rank_window(metric: str):
+    """Per time window, ``metric`` DESC (NULLs last) then gtid ASC."""
+    return Window.partitionBy("window_start").orderBy(
+        F.col(metric).desc(), F.col("gtid").asc()
+    )
+
+
 def top_transactions(stats: DataFrame, metric: str) -> DataFrame:
     """Top-1 transaction per window by ``metric`` (T2).
 
@@ -95,27 +104,47 @@ def top_transactions(stats: DataFrame, metric: str) -> DataFrame:
     """
     if metric not in METRICS:
         raise ValueError(f"unknown metric {metric!r}; one of {sorted(METRICS)}")
-    w = Window.partitionBy("window_start").orderBy(
-        F.col(metric).desc(), F.col("gtid").asc()
-    )
     return (
-        stats.withColumn("rn", F.row_number().over(w))
+        stats.withColumn("rn", F.row_number().over(_rank_window(metric)))
         .filter(F.col("rn") == 1)
         .drop("rn")
     )
 
 
-def transaction_result_table(
-    stats: DataFrame, metric: str, interval_seconds: int = 300
+def rank_column(metric: str) -> str:
+    """Name of ``metric``'s rank column in :func:`top_transactions_all`."""
+    return f"rn_{metric}"
+
+
+def top_transactions_all(stats: DataFrame) -> DataFrame:
+    """Top-1 transaction per window for every metric at once.
+
+    The same ranking as :func:`top_transactions` per metric, but the three
+    ``row_number`` windows share their partitioning, so the plan has ONE
+    ``Exchange hashpartitioning(window_start)`` and three sorts (not three
+    exchanges). Keeps the rows that win at least one metric — at most
+    three per window — with a :func:`rank_column` per metric; a metric's
+    winners are the rows whose rank is 1.
+    """
+    ranked = stats
+    for metric in METRICS:
+        ranked = ranked.withColumn(
+            rank_column(metric), F.row_number().over(_rank_window(metric))
+        )
+    return ranked.filter(F.least(*[rank_column(m) for m in METRICS]) == 1)
+
+
+def result_columns(
+    top: DataFrame, interval_seconds: int = 300, keep: Sequence[str] = ()
 ) -> DataFrame:
-    """Shape the top-1 rows like the reference result tables.
+    """Shape top-1 rows like the reference result tables, followed by the
+    ``keep`` columns.
 
     Columns per ``README.md:268-281``: ``end_time`` (window high watermark,
     P8 constant projection ``compute_transaction_info.py:55``), ``invertal``
     [sic — reference's column name, ``README.md:271``] = window length in
     seconds as a string, gtid + the three metrics.
     """
-    top = top_transactions(stats, metric)
     return top.select(
         "end_time",
         F.lit(str(interval_seconds)).alias("invertal"),
@@ -123,4 +152,13 @@ def transaction_result_table(
         "transaction_spend_time",
         "transaction_size",
         F.col("transaction_affected_rows").alias("single_statement_affected_rows"),
+        *keep,
     )
+
+
+def transaction_result_table(
+    stats: DataFrame, metric: str, interval_seconds: int = 300
+) -> DataFrame:
+    """The reference result table of one metric: its top-1 rows per window
+    in :func:`result_columns` shape."""
+    return result_columns(top_transactions(stats, metric), interval_seconds)

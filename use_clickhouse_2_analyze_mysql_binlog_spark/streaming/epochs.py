@@ -131,8 +131,9 @@ class TxnSink:
 
     1. a replayed, already-committed epoch is a no-op (``epoch_committed``);
     2. every table's output is written to its epoch directory with
-       ``mode=overwrite`` — a crashed attempt's partial directory is simply
-       rewritten on replay, never appended to;
+       ``mode=overwrite`` (``write``, from Spark) or replaced whole
+       (``stage``, from the driver) — a crashed attempt's partial directory
+       is simply rewritten on replay, never appended to;
     3. ONE atomic manifest update (tmp + rename) commits the epoch across
        ALL tables — there is no window where some tables of an epoch are
        visible and others are not.
@@ -179,6 +180,21 @@ class TxnSink:
     def write(self, table: str, epoch_id: int, df) -> None:
         """Stage one table's epoch output (overwrite => replay-safe)."""
         df.write.mode("overwrite").parquet(self.epoch_dir(table, epoch_id))
+
+    def stage(self, table: str, epoch_id: int, rows) -> None:
+        """Stage one table's epoch output from a pyarrow Table on the
+        driver, replacing whatever a crashed attempt left there.
+
+        For results of a few rows, where a Spark write costs more than the
+        data: its jobs, and a Hadoop local-filesystem permission call per
+        created file. The log already lives on the driver's filesystem, so
+        staging there adds no new requirement."""
+        import pyarrow.parquet as pq
+
+        d = self.epoch_dir(table, epoch_id)
+        shutil.rmtree(d, ignore_errors=True)
+        os.makedirs(d)
+        pq.write_table(rows, os.path.join(d, "part-00000.parquet"))
 
     def commit(self, epoch_id: int) -> None:
         """The single commit point for every table of this epoch."""

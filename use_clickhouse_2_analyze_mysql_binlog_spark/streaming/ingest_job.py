@@ -30,13 +30,14 @@ from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import epochs
 
 def make_append_batch(
     sink_path: str,
-    files_per_batch_day: int = 1,
     txn: bool = False,
     run_id: str = "local",
 ):
     """The per-epoch append body (module-level so replay behavior is
     unit-testable). foreachBatch (vs direct file sink) so the write can
-    coalesce and sort within partitions like the batch layout writer.
+    cluster and sort within partitions like the batch layout writer:
+    ``repartition(1, "day")`` gives the epoch one writer task, so each day
+    gets one file per epoch.
 
     Two replay-protection modes:
 
@@ -59,7 +60,7 @@ def make_append_batch(
             if sink.epoch_committed(epoch):
                 return
             (
-                batch.repartition(files_per_batch_day, "day")
+                batch.repartition(1, "day")
                 .sortWithinPartitions("execute_time", "gtid", "table", "schema")
                 .write.mode("overwrite")
                 .partitionBy("day")
@@ -70,7 +71,7 @@ def make_append_batch(
         if epochs.epoch_committed(sink_path, epoch):
             return
         (
-            batch.repartition(files_per_batch_day, "day")
+            batch.repartition(1, "day")
             .sortWithinPartitions("execute_time", "gtid", "table", "schema")
             .write.mode("append")
             .partitionBy("day")
@@ -166,7 +167,6 @@ def replay_dead_letters(
     dead_letter_path: str,
     sink_path: str,
     requeue_path: str | None = None,
-    files_per_batch_day: int = 1,
 ) -> tuple[int, int]:
     """Re-decode dead-lettered packets (e.g. after a decoder fix) and
     append the recovered rows to the fact table; returns
@@ -205,7 +205,7 @@ def replay_dead_letters(
         n_ok = rows.count()
         if n_ok:
             (
-                rows.repartition(files_per_batch_day, "day")
+                rows.repartition(1, "day")
                 .sortWithinPartitions(
                     "execute_time", "gtid", "table", "schema"
                 )
@@ -230,7 +230,6 @@ def run_ingest_stream(
     sink_path: str,
     checkpoint_path: str,
     available_now: bool = False,
-    files_per_batch_day: int = 1,
     txn: bool = False,
     dead_letter_path: str | None = None,
     constraints: list[tuple[str, str]] | None = None,
@@ -263,12 +262,7 @@ def run_ingest_stream(
     CONSTRAINT rejects the INSERT block.
     """
     run_id = epochs.run_id_for(checkpoint_path)
-    append_batch = make_append_batch(
-        sink_path,
-        files_per_batch_day,
-        txn=txn,
-        run_id=run_id,
-    )
+    append_batch = make_append_batch(sink_path, txn=txn, run_id=run_id)
     gate = (
         make_constraint_gate(
             constraints, quarantine_path, run_id, on_violation

@@ -6,11 +6,13 @@ the streaming aggregation itself maintains the merged state, and each epoch
 publishes a *fully merged* rollup — a strictly stronger contract with the
 same answers.
 
-Implementation: incremental partial counts per micro-batch (``update``
-output semantics via foreachBatch) MERGEd into the rollup store by
-re-summing only the touched keys. The rollup key space (day x event_type
-[x table]) is tiny, so the state and the store stay small at any fact
-volume — this is what makes the pattern safe at 100 TB/day ingest.
+Implementation: each micro-batch's rows, lifted to a count of 1 each,
+are MERGEd with the rollup store in one re-summing aggregation (via
+foreachBatch). Its partial aggregate counts the batch map-side, so an
+epoch shuffles once, not once to count and again to merge. The rollup key
+space (day x event_type [x table]) is tiny, so the state and the store
+stay small at any fact volume — this is what makes the pattern safe at
+100 TB/day ingest.
 """
 
 from __future__ import annotations
@@ -36,8 +38,8 @@ def make_merge_batch(
     run_id: str = "local",
 ):
     """The per-epoch MERGE body (module-level so replay behavior is unit-
-    testable): merge this epoch's partial counts into the previous manifest
-    snapshot, write a new versioned snapshot, flip the manifest.
+    testable): merge this epoch's rows, as counts of 1, into the previous
+    manifest snapshot, write a new versioned snapshot, flip the manifest.
 
     The replay guard compares epoch ids only WITHIN the same ``run_id``
     (derived from the checkpoint location): restarting with a fresh
@@ -48,10 +50,11 @@ def make_merge_batch(
     old-run snapshot generation)."""
 
     def partials(batch: DataFrame) -> DataFrame:
-        return batch.groupBy(
+        return batch.select(
             F.date_format("execute_time", DAY_FMT).alias("day"),
             *[c for c in keys if c != "day"],
-        ).agg(F.count(F.lit(1)).alias("event_count"))
+            F.lit(1).cast("long").alias("event_count"),
+        )
 
     return make_mv_merge_batch(
         spark, rollup_path, partials, keys, ("event_count",), run_id=run_id
@@ -68,9 +71,10 @@ def make_mv_merge_batch(
     state_fns: dict[str, str] | None = None,
 ):
     """Generalized MergeTree-MV merge body: ``partials_fn(batch)``
-    produces this epoch's partial aggregate rows (in ClickHouse terms,
-    the MV select over the inserted block), and the merge combines them
-    over ``keys`` into the published snapshot.
+    produces this epoch's partial rows (in ClickHouse terms, the MV select
+    over the inserted block, or the block's rows as one-row partials), and
+    ONE merge aggregation combines them over ``keys`` with the published
+    snapshot — on the first epoch too, so every snapshot is fully merged.
 
     Default (``state_fns=None``) is the SummingMergeTree contract:
     ``metrics`` re-sum (``summing_merge`` keeps them integral like CH's
@@ -90,14 +94,13 @@ def make_mv_merge_batch(
         ):
             return  # replay of an already-published epoch of THIS run
         partial = partials_fn(batch)
-        merged = partial
         if latest is not None:
             existing = schemas.read_parquet(spark, latest["dir"])
-            unioned = existing.unionByName(partial)
-            if state_fns:
-                merged = agg_state_merge(unioned, keys=keys, state_fns=state_fns)
-            else:
-                merged = summing_merge(unioned, keys=keys, metrics=metrics)
+            partial = existing.unionByName(partial)
+        if state_fns:
+            merged = agg_state_merge(partial, keys=keys, state_fns=state_fns)
+        else:
+            merged = summing_merge(partial, keys=keys, metrics=metrics)
         snapshot_dir = f"{rollup_path}/snapshots/{run_id}-{epoch}"
         # coalesce(1) is deliberate and SAFE here, unlike the upsert job's
         # row-state snapshot (which is partitioned, upsert_job.py): this
@@ -120,9 +123,10 @@ def run_daily_rollup_stream(
 ) -> StreamingQuery:
     """Maintain the daily rollup incrementally from a binlog event stream.
 
-    Each micro-batch contributes partial counts (map-side-combined by the
-    batch aggregation); the foreachBatch MERGE re-sums partials into the
-    published rollup — the SummingMergeTree merge, done eagerly.
+    Each micro-batch contributes its rows as counts of 1; the foreachBatch
+    MERGE re-sums them with the published rollup in one aggregation (its
+    partial aggregate combines the batch map-side) — the SummingMergeTree
+    merge, done eagerly.
 
     Replay-safe and atomic: each epoch merges the partials into the
     *previous manifest snapshot* and writes a NEW versioned snapshot dir,

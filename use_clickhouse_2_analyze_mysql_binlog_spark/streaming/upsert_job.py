@@ -5,10 +5,9 @@ canal — into ClickHouse is a ReplacingMergeTree the replica upserts into,
 with ``FINAL`` reads paying the unmerged-parts cost until background
 merges catch up (the reference stores raw events instead and re-aggregates
 per query, ``/root/reference/README.md:99-145``). This job maintains the
-*fully merged* row-state snapshot incrementally: each micro-batch is
-collapsed to its per-key latest versions and MERGEd into the published
-snapshot, so readers always see exactly one row per live key with zero
-read-side work.
+*fully merged* row-state snapshot incrementally: each micro-batch's rows
+are MERGEd into the published snapshot, so readers always see exactly one
+row per live key with zero read-side work.
 
 Exactly-once via the epochs snapshot+manifest protocol (streaming/
 epochs.py): every epoch writes a NEW versioned snapshot dir and flips the
@@ -17,10 +16,12 @@ recomputed from the untouched previous snapshot. Same guarantees as the
 rollup job — the MERGE body is just :func:`merge_final_states` instead of
 a re-sum.
 
-Scale notes: the per-batch collapse is a partial+final aggregate over the
-micro-batch only; the MERGE shuffles (snapshot ∪ batch-finals) on the
-sort key. Snapshot size is live-key cardinality, not stream volume — at
-100 TB/day ingest the MERGE cost tracks the table's working set. The
+Scale notes: the epoch lifts each batch row to a one-row state and merges
+(snapshot ∪ lifted rows) in ONE aggregation on the sort key — its partial
+aggregate still combines the batch map-side, so one hash exchange per
+epoch does what a batch collapse followed by a merge did with two.
+Snapshot size is live-key cardinality, not stream volume — at 100 TB/day
+ingest the MERGE cost tracks the table's working set. The
 snapshot is written PARTITIONED by (schema, table) straight out of the
 MERGE aggregate's hash exchange on (schema, table, row_pk): the write
 fans out across all aggregate tasks (no single-writer rail — VERDICT r05
@@ -41,19 +42,13 @@ from use_clickhouse_2_analyze_mysql_binlog_spark.operators import merge_tree
 from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import epochs
 
 
-#: mode -> (per-batch collapse, associative snapshot merge). "replacing"
-#: maintains the FINAL row-state directly; "collapsing" maintains the
-#: UNFILTERED signed state (net<=0 keys must stay mergeable — a later +1
-#: can revive them), with the FINAL filter applied at read time.
+#: mode -> (row lift, associative state merge). "replacing" maintains the
+#: FINAL row-state directly; "collapsing" maintains the UNFILTERED signed
+#: state (net<=0 keys must stay mergeable — a later +1 can revive them),
+#: with the FINAL filter applied at read time.
 _MODES = {
-    "replacing": (
-        merge_tree.replacing_merge_final,
-        merge_tree.merge_final_states,
-    ),
-    "collapsing": (
-        merge_tree.collapsing_partial_states,
-        merge_tree.merge_collapsing_states,
-    ),
+    "replacing": (merge_tree.replacing_versions, merge_tree.merge_final_states),
+    "collapsing": (merge_tree.collapsing_rows, merge_tree.merge_collapsing_states),
 }
 
 
@@ -85,7 +80,7 @@ def make_upsert_batch(
 ):
     """Per-epoch MERGE body (module-level for unit-testable replay
     semantics, like rollup_job.make_merge_batch)."""
-    collapse, merge = _MODES[mode]
+    lift, merge = _MODES[mode]
 
     def upsert_batch(batch: DataFrame, epoch: int) -> None:
         latest = epochs.read_manifest(state_path)
@@ -95,12 +90,9 @@ def make_upsert_batch(
             and epoch <= latest["epoch"]
         ):
             return  # replay of an already-published epoch of THIS run
-        finals = collapse(merge_tree.dml_rows(batch, pk_mod=pk_mod))
-        merged = finals
-        if latest is not None:
-            prev = _read_snapshot(spark, latest["dir"])
-            merged = merge(prev, finals)
-        elif merged.isEmpty():
+        prev = [] if latest is None else [_read_snapshot(spark, latest["dir"])]
+        merged = merge(*prev, lift(merge_tree.dml_rows(batch, pk_mod=pk_mod)))
+        if not prev and merged.isEmpty():
             # Nothing to publish yet (e.g. an all-DDL first micro-batch):
             # a zero-row PARTITIONED write leaves no data files, and the
             # next epoch's _read_snapshot could not infer a schema from
