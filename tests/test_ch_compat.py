@@ -2096,6 +2096,10 @@ def test_probe_batch_fifth_session(spark):
         t("SELECT 1 FROM remote('h', db.t)")
     with pytest.raises(ValueError, match="CSV column names"):
         t("SELECT 1 FROM file('/x.csv', 'CSV')")
+    with pytest.raises(
+        ValueError, match=r"explicit schema \(spark\.read\.schema"
+    ):
+        t("SELECT 1 FROM file('/x.csv', 'CSV', 'a Int32')")
     # combinator close-out: quantile -If twins, countDistinctIf,
     # medianIf, countArray, integer exponent helpers
     r4 = ch_compat.run_clickhouse_sql(spark, """

@@ -266,120 +266,6 @@ def test_wire_codec_is_primary_decode_path():
     )
 
 
-def test_jdbc_sink_config_and_idempotent_writer(spark):
-    from use_clickhouse_2_analyze_mysql_binlog_spark.sinks import (
-        JdbcSinkConfig,
-        foreach_batch_writer,
-    )
-
-    cfg = JdbcSinkConfig(
-        url="jdbc:clickhouse://h1:8123,h2:8123/mysql_monitor",
-        table="largest_transaction_local",
-        user="writer",
-        batch_size=5000,
-    )
-    assert cfg.properties()["batchsize"] == "5000"
-    assert cfg.properties()["user"] == "writer"
-
-    written = []
-
-    def fake_writer(df, _cfg):
-        written.extend(sorted(r["end_time"] for r in df.collect()))
-
-    batch = spark.createDataFrame(
-        [("t1", 1), ("t2", 2), ("t3", 3)], "end_time string, v int"
-    )
-    # sink already holds t1/t3 -> only t2 may be written (S11 guard)
-    existing = spark.createDataFrame([("t1",), ("t3",)], "end_time string")
-    publish = foreach_batch_writer(
-        cfg,
-        dedup_keys=["end_time"],
-        existing_keys=lambda b: existing,
-        writer=fake_writer,
-    )
-    publish(batch, 0)
-    assert written == ["t2"]
-    # replayed epoch against a sink now containing everything -> no write
-    written.clear()
-    publish2 = foreach_batch_writer(
-        cfg,
-        dedup_keys=["end_time"],
-        existing_keys=lambda b: batch.select("end_time"),
-        writer=fake_writer,
-    )
-    publish2(batch, 0)
-    assert written == []
-
-
-def test_jsonl_source_corrupt_record_capture(spark, tmp_path):
-    from use_clickhouse_2_analyze_mysql_binlog_spark.sources import files
-
-    p = tmp_path / "drop.jsonl"
-    p.write_text(
-        '{"doc_id": 1, "text": "hello world", "lang": "en", "source": "s", "n_chars": 11}\n'
-        '{"doc_id": 2, "text": "bonjour", "lang": "fr", "source": "s", "n_chars": 7}\n'
-        "this line is not json at all\n"
-        '{"doc_id": 3, "text": "ok", "lang": "en", "source": "s", "n_chars": 2}\n'
-    )
-    clean, corrupt = files.split_corrupt(
-        files.read_documents_jsonl(spark, str(p))
-    )
-    assert {r.doc_id for r in clean.collect()} == {1, 2, 3}
-    assert files.CORRUPT_COL not in clean.columns
-    bad = corrupt.collect()
-    assert len(bad) == 1 and "not json" in bad[0][files.CORRUPT_COL]
-
-
-def test_csv_source_corrupt_record_capture(spark, tmp_path):
-    from use_clickhouse_2_analyze_mysql_binlog_spark.sources import files
-
-    p = tmp_path / "drop.csv"
-    p.write_text(
-        "doc_id,text,lang,source,n_chars\n"
-        "1,hello,en,s,5\n"
-        "2,salut,fr,s,5\n"
-        "not_a_number,oops,en,s,xyz\n"
-    )
-    clean, corrupt = files.split_corrupt(files.read_documents_csv(spark, str(p)))
-    assert {r.doc_id for r in clean.collect()} == {1, 2}
-    assert corrupt.count() == 1
-
-
-def test_jdbc_source_partitioned_read_options():
-    from use_clickhouse_2_analyze_mysql_binlog_spark.sources.jdbc import (
-        JdbcSourceConfig,
-    )
-
-    cfg = JdbcSourceConfig(
-        url="jdbc:mysql://h1:3306/appdb",
-        table="broker_binlog",
-        user="u",
-        partition_column="id",
-        lower_bound=0,
-        upper_bound=1_000_000,
-        num_partitions=32,
-    )
-    opts = cfg.reader_options()
-    assert opts["partitionColumn"] == "id"
-    assert opts["numPartitions"] == "32"
-    assert opts["fetchsize"] == "10000"
-
-    with pytest.raises(ValueError, match="needs"):
-        JdbcSourceConfig(
-            url="u", table="t", partition_column="id"
-        ).reader_options()
-    with pytest.raises(ValueError, match="not both"):
-        JdbcSourceConfig(
-            url="u", table="t", partition_column="id", lower_bound=0,
-            upper_bound=1, num_partitions=2, predicates=["day = '2020-01-01'"],
-        ).reader_options()
-
-    per_day = JdbcSourceConfig(
-        url="u", table="t", predicates=[f"day = '2020-01-{d:02d}'" for d in range(1, 31)]
-    )
-    assert "partitionColumn" not in per_day.reader_options()
-
-
 def test_decode_packets_routed(spark):
     """on_error='route': a poison packet becomes ONE dead-letterable row
     (error text + verbatim bytes) instead of a forever-retried task

@@ -214,20 +214,6 @@ def test_multimodal_metadata_prunes_scan(spark):
     assert "Exchange" not in plan, plan  # pure per-row pass
 
 
-def test_pivot_is_rollup_plus_tiny_shuffle(spark):
-    df = rollups.daily_counts_pivot(
-        schemas.binlog_view(schemas.load_table(spark, SF_DIR, "events"))
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # explicit pivot values -> no schema-discovery job and no join; Spark
-    # plans pivot as the (day, event_type) rollup shuffle plus a pivotfirst
-    # shuffle that carries only rollup rows (days x types)
-    assert plan.count("Exchange hashpartitioning") == 2, plan
-    assert plan.count("Scan parquet") == 1, plan
-    assert "pivotfirst" in plan, plan
-    assert "Join" not in plan, plan
-
-
 def test_gapfill_spine_joins_broadcast(spark):
     plan = _plan(spark, "daily_counts_gapfilled")
     # the date spine and the daily rollup are both tiny: the gap-fill join

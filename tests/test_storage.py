@@ -346,87 +346,6 @@ def test_optimize_deduplicate_and_truncate(spark, tmp_path):
     assert list((tmp_path / "fact").glob("day=*")) == []
 
 
-def test_sorted_export_total_order(spark, tmp_path):
-    """write_sorted_export must produce a TOTAL order: each file sorted,
-    and files' key ranges disjoint and ordered (so a reader concatenating
-    files in name order sees fully sorted data)."""
-    import pyarrow.parquet as pq
-
-    binlog = binlog_view(load_table(spark, SF_DIR, "events"))
-    out = str(tmp_path / "sorted")
-    storage.write_sorted_export(
-        binlog, out, ("execute_time", "binlog_pos"), num_files=4
-    )
-    files = sorted((tmp_path / "sorted").glob("part-*.parquet"))
-    assert len(files) == 4
-    prev_max = None
-    total = 0
-    for f in files:
-        t = pq.read_table(str(f), columns=["execute_time", "binlog_pos"])
-        keys = list(zip(t.column(0).to_pylist(), t.column(1).to_pylist()))
-        assert keys == sorted(keys), f"{f.name} not internally sorted"
-        if prev_max is not None:
-            assert keys[0] >= prev_max, "file ranges overlap"
-        prev_max = keys[-1]
-        total += len(keys)
-    assert total == binlog.count()
-
-    # the plan pays exactly one RangePartitioning exchange
-    plan = (
-        binlog.repartitionByRange(4, "execute_time", "binlog_pos")
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "rangepartitioning" in plan.lower(), plan
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Two tables bucketed on the join key must sort-merge join with zero
-    Exchange and zero Sort — the scan satisfies distribution + ordering
-    (the 100 TB co-location strategy for repeated fact-fact joins)."""
-    from pyspark.sql import functions as F
-
-    from use_clickhouse_2_analyze_mysql_binlog_spark import schemas
-    from use_clickhouse_2_analyze_mysql_binlog_spark.plans import storage
-    from tests.conftest import SF_DIR
-
-    orders = schemas.load_table(spark, SF_DIR, "orders")
-    lineitem = schemas.load_table(spark, SF_DIR, "lineitem")
-    storage.write_bucketed(
-        orders, "orders_b", str(tmp_path / "orders_b"), "o_orderkey", 4
-    )
-    storage.write_bucketed(
-        lineitem, "lineitem_b", str(tmp_path / "lineitem_b"), "l_orderkey", 4
-    )
-    try:
-        # bucket-sorted scan ordering is opt-in since Spark 3 (it requires
-        # one file per bucket, which write_bucketed guarantees)
-        spark.conf.set("spark.sql.legacy.bucketedTableScan.outputOrdering", "true")
-        # hint forces SMJ (at test SF the tables fit the broadcast
-        # threshold; at the scale bucketing targets, SMJ is the default)
-        joined = (
-            spark.table("orders_b")
-            .hint("merge")
-            .join(
-                spark.table("lineitem_b").hint("merge"),
-                F.col("o_orderkey") == F.col("l_orderkey"),
-            )
-            .select("o_orderkey", "o_orderpriority", "l_extendedprice")
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert "Sort " not in plan.replace("SortMergeJoin", "SMJ"), plan
-        expected = (
-            orders.join(lineitem, F.col("o_orderkey") == F.col("l_orderkey"))
-            .count()
-        )
-        assert joined.count() == expected
-    finally:
-        spark.conf.unset("spark.sql.legacy.bucketedTableScan.outputOrdering")
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS lineitem_b")
-
-
 def test_compact_day_partitions(spark, tmp_path):
     from pyspark.sql import functions as F
 
@@ -493,43 +412,6 @@ def test_analytics_over_partitioned_layout(spark, tmp_path):
     )
     assert got.count() == want.count() > 0
     assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
-
-
-def test_zorder_clusters_both_columns(spark, tmp_path):
-    """Quantitative clustering check: with a Morton key, per-file min/max
-    ranges are narrow on BOTH columns; with a single-column sort the
-    second column's per-file ranges span ~the whole domain."""
-    from pyspark.sql import functions as F
-
-    from use_clickhouse_2_analyze_mysql_binlog_spark.plans import storage
-
-    n, domain = 40_000, 1 << 10
-    df = spark.range(n).select(
-        (F.col("id") * 2654435761 % domain).alias("x"),
-        (F.col("id") * 40503 % domain).alias("y"),
-    )
-    zpath, spath = str(tmp_path / "z"), str(tmp_path / "s")
-    storage.write_zordered(df, zpath, "x", "y", num_files=16, bits=10)
-    (
-        df.repartitionByRange(16, "x").sortWithinPartitions("x")
-        .write.mode("overwrite").parquet(spath)
-    )
-
-    def avg_range(path, col):
-        per_file = (
-            spark.read.parquet(path)
-            .withColumn("f", F.input_file_name())
-            .groupBy("f")
-            .agg((F.max(col) - F.min(col)).alias("r"))
-        )
-        return per_file.agg(F.avg("r")).collect()[0][0]
-
-    zx, zy = avg_range(zpath, "x"), avg_range(zpath, "y")
-    sx, sy = avg_range(spath, "x"), avg_range(spath, "y")
-    assert sx < domain * 0.2          # single-col sort: x tightly clustered
-    assert sy > domain * 0.8          # ...but y spans the whole domain
-    assert zx < domain * 0.5 and zy < domain * 0.5  # z-order: BOTH narrow
-    assert max(zx, zy) < sy * 0.6     # and far better than the sorted y
 
 
 def test_ivf_index_partition_pruned_read(spark, tmp_path):

@@ -528,91 +528,6 @@ def test_stateful_sessionizer_matches_batch(spark, tmp_path, binlog_df):
     assert len(got) > 0
 
 
-def test_streaming_curation_matches_batch(spark, tmp_path):
-    """Streaming curation must keep exactly one survivor per content hash
-    with the same gate as the batch pipeline: survivor hash-sets equal,
-    planted duplicates and PII redacted."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark.operators import curation
-    from use_clickhouse_2_analyze_mysql_binlog_spark.functions import hash60
-    from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import curate_job
-
-    docs = schemas.load_table(spark, SF_DIR, "documents").withColumn(
-        "ingest_time",
-        F.expr("timestamp '2024-01-01 00:00:00' + make_interval(0,0,0,0,0,0,doc_id)"),
-    )
-    # plant: a duplicate of doc 0 and a PII-bearing doc
-    dup = docs.limit(1).select(
-        (F.col("doc_id") + 1_000_000).alias("doc_id"),
-        "text", "lang", "source", "n_chars",
-        (F.col("ingest_time") + F.expr("INTERVAL 1 SECOND")).alias("ingest_time"),
-    )
-    pii_text = (
-        "please contact our support team at helper@example.com for details "
-        "about the unique offering available today"
-    )
-    pii = spark.createDataFrame(
-        [(2_000_000, pii_text, "en", "src0", len(pii_text))],
-        "doc_id long, text string, lang string, source string, n_chars long",
-    ).withColumn("ingest_time", F.expr("timestamp '2024-01-01 01:00:00'"))
-    planted = docs.unionByName(dup).unionByName(pii)
-    src = str(tmp_path / "docs_src")
-    planted.repartition(4).write.parquet(src)
-
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src).schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    out = str(tmp_path / "curated")
-    q = curate_job.run_curate_stream(
-        stream, out, str(tmp_path / "ckpt"), available_now=True
-    )
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out)
-    want = curation.curated_documents(planted)  # batch over the same input
-    assert got.count() == want.count()
-    got_hashes = {
-        r[0] for r in got.select(hash60(F.col("text"))).collect()
-    }
-    want_hashes = {
-        r[0] for r in want.select(hash60(F.col("text"))).collect()
-    }
-    assert got_hashes == want_hashes
-    # the planted PII doc survived the gate AND was redacted
-    assert got.filter(F.col("text").contains("<EMAIL>")).count() == 1
-    assert got.filter(F.col("text").rlike("@")).count() == 0  # emails gone
-
-
-def test_streaming_dedup_drops_replayed_rows(spark, tmp_path, binlog_df):
-    """dropDuplicatesWithinWatermark: a replayed copy of recent rows must
-    vanish; every original row survives exactly once."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import dedup_job
-
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "deduped")
-    ckpt = str(tmp_path / "ckpt")
-    base = binlog_df.repartition(2)
-    base.write.parquet(src)
-    # a replay: duplicate the 50 latest statements (inside any watermark)
-    base.orderBy(F.col("execute_time").desc()).limit(50).write.mode(
-        "append"
-    ).parquet(src)
-
-    stream = (
-        spark.readStream.schema(binlog_df.schema)
-        .option("maxFilesPerTrigger", 2)
-        .parquet(src)
-    )
-    q = dedup_job.run_dedup_stream(stream, out, ckpt, available_now=True)
-    q.awaitTermination(180)
-
-    got = spark.read.parquet(out)
-    n_expected = binlog_df.count()
-    assert got.count() == n_expected
-    assert got.select("binlog_file", "binlog_pos").distinct().count() == n_expected
-
-
 def test_sessionizer_event_time_timeout_path(spark, tmp_path, binlog_df):
     """Keys receiving no new data must still emit once the watermark passes
     their open session + gap — the hasTimedOut branch, exercised by
@@ -797,141 +712,6 @@ def test_incremental_dedup_partial_crash_replay(spark, tmp_path):
     assert 20 not in {
         r.doc_id for r in incremental_dedup_job.read_corpus(spark, root).collect()
     }
-
-
-def test_streaming_funnel_matches_batch(spark, tmp_path):
-    """Streamed funnel transitions (buffer-until-watermark automaton) must
-    reproduce the batch window_funnel counts once the watermark passes all
-    real events: per-step transition counts == users_reached."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark.operators import funnels
-    from use_clickhouse_2_analyze_mysql_binlog_spark.streaming import funnel_job
-
-    events = (
-        spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        .select("user_id", "ts", "event_type")
-    )
-    steps = ["view", "click", "purchase"]
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "transitions")
-    ckpt = str(tmp_path / "ckpt")
-    events.repartition(4).write.parquet(src)
-
-    def run():
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 2)
-            .parquet(src)
-        )
-        q = funnel_job.run_funnel_job(
-            stream, out, ckpt, steps=steps, window_seconds=3600,
-            available_now=True,
-        )
-        q.awaitTermination(180)
-
-    run()  # pass 1: real data; watermark trails max ts by the lateness
-
-    # pass 2: a single far-future row advances the global watermark past
-    # every real event, finalizing all buffered automata; the flush row
-    # itself stays above the new watermark and never folds
-    gmax = events.agg(F.max("ts")).collect()[0][0]
-    flush = spark.createDataFrame(
-        [(-1, gmax, "view")], "user_id long, ts timestamp, event_type string"
-    ).select("user_id", (F.col("ts") + F.expr("INTERVAL 2 DAYS")).alias("ts"),
-             "event_type")
-    flush.coalesce(1).write.mode("append").parquet(src)
-    run()
-
-    got = (
-        spark.read.parquet(out)
-        .filter(F.col("user_id") >= 0)
-        .groupBy("step")
-        .count()
-        .collect()
-    )
-    got_counts = {r.step: r["count"] for r in got}
-    want = {
-        r.step: r.users_reached
-        for r in funnels.window_funnel(
-            spark.read.parquet(src).filter(F.col("user_id") >= 0),
-            steps, window_seconds=3600,
-        ).collect()
-        if r.users_reached > 0
-    }
-    assert got_counts == want
-
-    # each user transitions through a step at most once (exactly-once sink)
-    dup = (
-        spark.read.parquet(out)
-        .groupBy("user_id", "step")
-        .count()
-        .filter(F.col("count") > 1)
-        .count()
-    )
-    assert dup == 0
-
-
-class _FakeGroupState:
-    """Minimal applyInPandasWithState GroupState double for unit-testing
-    the funnel fold's state lifecycle without a streaming query."""
-
-    def __init__(self, value=None, watermark_ms=0, timed_out=False):
-        self._value = value
-        self._wm = watermark_ms
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_set_to = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def getCurrentWatermarkMs(self):
-        return self._wm
-
-    def update(self, value):
-        self._value = value
-
-    def remove(self):
-        self._value = None
-        self.removed = True
-
-    def setTimeoutTimestamp(self, ts_ms):
-        self.timeout_set_to = ts_ms
-
-
-def test_funnel_partial_state_removed_after_window_closes():
-    """ADVICE r03: a partial funnel (level>=1, empty buffer) whose anchored
-    window closed below the watermark can never advance — the fold must
-    drop it (bounded state), and must arm a timeout while it still can."""
-    from use_clickhouse_2_analyze_mysql_binlog_spark.streaming.funnel_job import (
-        make_funnel_fn,
-    )
-
-    fold = make_funnel_fn(["view", "click", "purchase"], window_seconds=3600)
-    win_ms = 3600 * 1000
-
-    # 1. live partial state (wm before window close): kept + timeout armed
-    live = _FakeGroupState(value=(1, 1_000_000, 1_000_000, [], []),
-                           watermark_ms=1_000_000 + win_ms - 1)
-    assert list(fold((7,), iter([]), live)) == []
-    assert live.exists and not live.removed
-    assert live.timeout_set_to == 1_000_000 + win_ms
-
-    # 2. same state after the watermark passes t1 + window: removed
-    dead = _FakeGroupState(value=(1, 1_000_000, 1_000_000, [], []),
-                           watermark_ms=1_000_000 + win_ms, timed_out=True)
-    assert list(fold((7,), iter([]), dead)) == []
-    assert dead.removed
-
-    # 3. converted users never re-create state
-    done = _FakeGroupState(value=(3, 1_000_000, 2_000_000, [], []),
-                           watermark_ms=0)
-    assert list(fold((7,), iter([]), done)) == []
-    assert done.removed
 
 
 def test_upsert_stream_matches_batch_replacing(spark, tmp_path):

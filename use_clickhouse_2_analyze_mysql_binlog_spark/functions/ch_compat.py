@@ -5376,14 +5376,15 @@ def translate(
     # file/s3(path, format) -> Spark's direct-path query for
     # self-describing formats (parquet/orc/json carry their own column
     # names; CH's CSV names c1.. diverge from Spark's _c0.. so CSV is
-    # loud — use sources/files.py with an explicit schema)
+    # loud — read it with spark.read.schema(...).csv(path))
     def _path_table(fn):
         def build(a):
             if len(a) != 2:
                 raise ValueError(
                     f"{fn}(path, format) translates with exactly 2 "
-                    "arguments; credentialed/schema forms need the "
-                    "sources module"
+                    "arguments; for credentialed/schema forms read the "
+                    "file with Spark's own reader and an explicit schema "
+                    "(spark.read.schema(...).csv(path))"
                 )
             pm = re.fullmatch(r"\x00L(\d+)\x00", a[0].strip())
             fm2 = re.fullmatch(r"\x00L(\d+)\x00", a[1].strip())
@@ -5404,7 +5405,8 @@ def translate(
                     f"{fn}: format {fmt!r} is not translated (parquet/"
                     "ORC/JSONEachRow are self-describing; CH 'JSON' is "
                     "a meta/data wrapper document and CSV column names "
-                    "diverge — read via sources/files.py)"
+                    "diverge — read it with Spark's own reader and an "
+                    "explicit schema: spark.read.schema(...).csv(path))"
                 )
             path = literals[int(pm.group(1))][1:-1]
             return f"{fmt_map[fmt]}.`{path}`"
@@ -5418,8 +5420,8 @@ def translate(
         if re.search(rf"\b(?:FROM|JOIN)\s+{_tf}\s*\(", out, re.IGNORECASE):
             raise ValueError(
                 f"table function {_tf}() is not translated — remote/"
-                "DB sources map to the sources module (JDBC reader / "
-                "spark.read) and distribution is Spark's own job"
+                "DB sources map to Spark's own readers (spark.read.jdbc "
+                "/ spark.read) and distribution is Spark's own job"
             )
 
     # dictGet* is structural (it implies a dictionary lookup JOIN), not

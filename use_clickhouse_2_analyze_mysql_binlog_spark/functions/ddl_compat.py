@@ -631,11 +631,6 @@ class Action:
 _IDENT = r"(?:`[^`]+`|[A-Za-z_][\w]*)"
 _QNAME = rf"{_IDENT}(?:\.{_IDENT})?"
 
-_CLAUSE_KEYWORDS = (
-    "ENGINE", "PARTITION BY", "PRIMARY KEY", "ORDER BY", "SAMPLE BY",
-    "TTL", "SETTINGS", "COMMENT",
-)
-
 
 def _unquote(ident: str) -> str:
     ident = ident.strip()

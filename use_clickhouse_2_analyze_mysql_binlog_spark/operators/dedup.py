@@ -43,7 +43,6 @@ from use_clickhouse_2_analyze_mysql_binlog_spark.operators.text import (
     NORM_SQL,
     SHINGLES_SQL,
     TOKENS_SQL,
-    _hash60_expr_sql,
     shingles_expr,
     tokens,
 )
@@ -91,18 +90,6 @@ def apply_dedup(documents: DataFrame, pairs: DataFrame) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Shared: per-document shingle hash arrays
 # ---------------------------------------------------------------------------
-
-def _doc_shingles(documents: DataFrame) -> DataFrame:
-    norm = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
-    return (
-        documents.select("doc_id", norm.alias("norm"))
-        .withColumn("shingles", shingles_expr("norm"))
-        .withColumn(
-            "sh_hashes",
-            F.expr(f"transform(shingles, s -> {_hash60_expr_sql('s')})"),
-        )
-    )
-
 
 def _shingle_posting(
     documents: DataFrame, persist: bool = False, distinct: bool = True

@@ -513,37 +513,8 @@ def aggregating_merge(partials: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Reporting shapes over the daily rollup: pivot, moving average, gap-fill
+# Reporting shapes over the daily rollup: moving average, gap-fill
 # ---------------------------------------------------------------------------
-
-#: explicit pivot domain — passing values to pivot() skips the extra
-#: collect-distinct job Spark otherwise runs to discover the columns, and
-#: pins the output schema (a stray event type cannot silently widen a
-#: 100 TB report)
-PIVOT_EVENT_TYPES = ("CLICK", "ERROR", "PURCHASE", "SIGNUP", "VIEW")
-
-
-def daily_counts_pivot(binlog: DataFrame) -> DataFrame:
-    """Days as rows, event types as columns — the wide report shape.
-
-    Plans as the long-form (day, event_type) rollup's shuffle plus a
-    day-keyed ``pivotfirst`` shuffle that carries only rollup rows
-    (days x types) — the explicit value list avoids the schema-discovery
-    job an unvalued ``pivot()`` runs first.
-    """
-    return (
-        binlog.groupBy(F.date_format("execute_time", DAY_FMT).alias("day"))
-        .pivot("event_type", list(PIVOT_EVENT_TYPES))
-        .agg(F.count(F.lit(1)))
-        .select(
-            "day",
-            *[
-                F.coalesce(F.col(t), F.lit(0)).alias(f"n_{t.lower()}")
-                for t in PIVOT_EVENT_TYPES
-            ],
-        )
-    )
-
 
 def daily_counts_moving_avg(binlog: DataFrame, days: int = 7) -> DataFrame:
     """Per-event-type trailing ``days``-row moving average over the daily

@@ -108,32 +108,6 @@ def read_fact_table(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.parquet(path)
 
 
-def write_sorted_export(
-    df: DataFrame,
-    path: str,
-    sort_cols: tuple[str, ...],
-    num_files: int | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Globally-ordered export: file i's rows all sort before file i+1's,
-    and rows are sorted within each file.
-
-    ``repartitionByRange`` samples the sort key to build balanced range
-    boundaries (one RangePartitioning exchange), then each writer task
-    sorts only its slice — a total order over 100 TB without any single
-    node ever holding more than one slice (``orderBy``+single write would
-    serialize the world through one task). Readers get both lexicographic
-    file order and per-file parquet min/max stats that never overlap, so
-    merge-style consumers and range lookups stay O(slice).
-    """
-    cols = [F.col(c) for c in sort_cols]
-    if num_files is not None:
-        ranged = df.repartitionByRange(num_files, *cols)
-    else:
-        ranged = df.repartitionByRange(*cols)
-    ranged.sortWithinPartitions(*sort_cols).write.mode(mode).parquet(path)
-
-
 def retention_cutoff(today: dt.date, months: int = 30) -> dt.date:
     """``TTL execute_time + toIntervalMonth(months)`` cutoff date."""
     total = today.year * 12 + (today.month - 1) - months
@@ -560,38 +534,6 @@ def ttl_row_sweep(
     return out
 
 
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    bucket_key: str,
-    num_buckets: int = 8,
-    mode: str = "overwrite",
-) -> None:
-    """Write a table bucketed (hash-clustered) + sorted by ``bucket_key``.
-
-    This is the 100 TB co-location strategy for repeated fact-fact joins
-    (orders⋈lineitem on orderkey, SURVEY.md §2.3 scale note): two tables
-    bucketed the same way join with **zero shuffle and zero sort** — the
-    scan itself satisfies the join's distribution and ordering requirement.
-    Bucket metadata needs a catalog, hence ``saveAsTable`` (external, at
-    ``path``) rather than a bare parquet write.
-    """
-    # Pre-partition by the bucket hash so each bucket is exactly ONE file:
-    # otherwise every writer task emits a file per bucket (tasks × buckets
-    # small files), and Spark only trusts sortBy order — eliding the
-    # join-side Sort — when a bucket is a single file.
-    (
-        df.repartition(num_buckets, F.col(bucket_key))
-        .write.mode(mode)
-        .option("path", path)
-        .bucketBy(num_buckets, bucket_key)
-        .sortBy(bucket_key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def compact_day_partitions(
     spark: SparkSession,
     path: str,
@@ -638,66 +580,3 @@ def compact_day_partitions(
         compacted.append(part.name)
     return compacted
 
-
-# ---------------------------------------------------------------------------
-# Z-order (Morton) clustering for multi-column data skipping
-# ---------------------------------------------------------------------------
-
-ZORDER_BITS = 16
-
-
-def zorder_key(col_a: str, col_b: str, bits: int = ZORDER_BITS):
-    """Morton-interleave the low ``bits`` of two non-negative integer
-    columns into one sort key, as a pure codegen'd expression.
-
-    Sorting by one column gives perfect file-level min/max ranges on that
-    column and useless ranges on every other; sorting by the interleaved
-    key gives *both* columns ranges ~sqrt(files) narrower than random —
-    parquet row-group/file skipping then works for predicates on either
-    column. This is the same layout idea as a MergeTree compound sort key
-    or Delta's OPTIMIZE ZORDER, built from shift/or expressions.
-
-    Inputs must fit in ``bits`` (callers bucket/clamp first — e.g. days
-    since epoch, id mod 2^16); values are clamped defensively so one
-    outlier cannot fold the curve back on itself.
-    """
-    from pyspark.sql import functions as F
-
-    def clamp(c: str):
-        v = F.col(c).cast("long")
-        hi = F.lit((1 << bits) - 1)
-        return F.when(v < 0, F.lit(0)).otherwise(F.least(v, hi))
-
-    a, b = clamp(col_a), clamp(col_b)
-    key = F.lit(0).cast("long")
-    for i in range(bits):
-        bit_a = F.shiftright(a, i).bitwiseAND(F.lit(1))
-        bit_b = F.shiftright(b, i).bitwiseAND(F.lit(1))
-        key = (
-            key
-            .bitwiseOR(F.shiftleft(bit_a, 2 * i))
-            .bitwiseOR(F.shiftleft(bit_b, 2 * i + 1))
-        )
-    return key
-
-
-def write_zordered(
-    df,
-    path: str,
-    col_a: str,
-    col_b: str,
-    num_files: int = 16,
-    bits: int = ZORDER_BITS,
-) -> None:
-    """Write ``df`` clustered by the (col_a, col_b) Morton key:
-    range-partition by the key (balanced files in key order), sort within
-    partitions, drop the key. Readers filtering on EITHER column skip
-    most files via parquet footer min/max stats."""
-    (
-        df.withColumn("_z", zorder_key(col_a, col_b, bits))
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

@@ -154,10 +154,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TESTDATA_TABLES}
-
-
 def read_parquet(
     spark: SparkSession, path: str, string_partitions: tuple[str, ...] = ()
 ) -> DataFrame:
